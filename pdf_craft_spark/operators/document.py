@@ -1,8 +1,8 @@
 """Per-document extraction orchestration (the §3 lifecycle, minus OCR).
 
-This is the single-doc kernel the Spark plan wraps in
-``groupBy(doc_id).applyInPandas``: raw classified layout spans in → ordered
-output spans + markdown out.  Mirrors ``Transform._extract_from_pdf`` +
+This is the single-doc kernel the Spark plan wraps in one mapInArrow
+boundary (plans/pipeline.py ``_per_doc``): raw classified layout spans in →
+ordered output spans + markdown out.  Mirrors ``Transform._extract_from_pdf`` +
 ``generate_chapter_files`` + ``render_markdown_file``
 (/root/reference/pdf_craft/transform.py:192, sequence/generation.py:23,
 markdown/render/render.py:15).
@@ -52,8 +52,7 @@ def prepare_layout(
     """Stage-1 per-layout prep (F1 normalize, F2 clamp, F3 degeneration
     filter).  Returns (normalized_text, clamped_det) or None to drop.
 
-    In the Spark plan this runs vectorized BEFORE the per-doc kernel; the
-    kernel accepts either prepared or raw layouts (idempotent)."""
+    Idempotent, so already-prepared layouts pass through unchanged."""
     text = normalize_text(text)
     clamped = clamp_det(page_width, page_height, det)
     if clamped is None:
@@ -63,30 +62,21 @@ def prepare_layout(
     return text, clamped
 
 
-def prepare_pages(pages: list[RawPage], text_ops: bool = True) -> list[RawPage]:
+def prepare_pages(pages: list[RawPage]) -> list[RawPage]:
     """Apply prepare_layout to every layout; re-assign per-area orders
     (the reference numbers layouts after filtering, page_extractor.py:128-134).
-
-    ``text_ops=False`` when the Spark plan's stage 1 already ran F1/F3/F4
-    JVM-side — only F2 clamping + renumbering remain.
     """
     out: list[RawPage] = []
     for page in pages:
         new_page = RawPage(index=page.index, width=page.width, height=page.height)
         for area_src, area_dst in ((page.body, new_page.body), (page.footnotes, new_page.footnotes)):
             for lay in area_src:
-                if text_ops:
-                    prepped = prepare_layout(
-                        lay.kind, lay.text, lay.det, lay.media_ref, page.width, page.height
-                    )
-                    if prepped is None:
-                        continue
-                    text, det = prepped
-                else:
-                    clamped = clamp_det(page.width, page.height, lay.det)
-                    if clamped is None:
-                        continue
-                    text, det = lay.text, clamped
+                prepped = prepare_layout(
+                    lay.kind, lay.text, lay.det, lay.media_ref, page.width, page.height
+                )
+                if prepped is None:
+                    continue
+                text, det = prepped
                 area_dst.append(
                     RawLayout(
                         kind=lay.kind,
@@ -104,7 +94,6 @@ def analyse_document(
     pages: list[RawPage],
     toc_assumed: bool = True,
     prepared: bool = False,
-    stage1_done: bool = False,
     boilerplate_strip: bool = False,
 ):
     """The sink-independent pipeline for one document → (chapters,
@@ -113,13 +102,11 @@ def analyse_document(
     the same generated chapter files (markdown/render/render.py:15,
     epub/render.py:43).
 
-    ``stage1_done``: F1/F3/F4 already applied (JVM stage 1) — skip the
-    Python re-run, keep F2 + renumbering.
     ``boilerplate_strip``: enable the §2.12 frequency-based repeated-line
     demotion (off by default: the reference's model does this upstream,
     so parity mode leaves repeated lines alone)."""
     if not prepared:
-        pages = prepare_pages(pages, text_ops=not stage1_done)
+        pages = prepare_pages(pages)
     if boilerplate_strip:
         from pdf_craft_spark.operators.boilerplate import strip_boilerplate
 
@@ -208,7 +195,6 @@ def extract_document(
     pages: list[RawPage],
     toc_assumed: bool = True,
     prepared: bool = False,
-    stage1_done: bool = False,
     boilerplate_strip: bool = False,
 ) -> tuple[str, list[OutSpan]]:
     """Full pipeline for one document → (markdown, ordered output spans):
@@ -217,7 +203,6 @@ def extract_document(
         pages,
         toc_assumed=toc_assumed,
         prepared=prepared,
-        stage1_done=stage1_done,
         boilerplate_strip=boilerplate_strip,
     )
     return render_document(chapters, refs_by_key)
@@ -227,7 +212,6 @@ def extract_epub_records(
     pages: list[RawPage],
     toc_assumed: bool = True,
     prepared: bool = False,
-    stage1_done: bool = False,
 ) -> tuple[list[tuple], list]:
     """S9 sink: analyse_document + EPUB record conversion + TOC collection.
     Returns (record rows, TocRec list) — see operators/epub_records.py."""
@@ -237,7 +221,7 @@ def extract_epub_records(
     )
 
     chapters, refs_by_key, toc_items = analyse_document(
-        pages, toc_assumed=toc_assumed, prepared=prepared, stage1_done=stage1_done
+        pages, toc_assumed=toc_assumed, prepared=prepared
     )
     return (
         document_epub_records(chapters, refs_by_key),

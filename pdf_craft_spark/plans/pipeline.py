@@ -1,45 +1,49 @@
 """The distributed extraction plan.
 
-Shape (SURVEY.md §3.3, tightened round 4): one fully NARROW pipeline,
-ZERO shuffles.
+Shape: one fully NARROW stage, ZERO shuffles, one Python boundary.
 
-  stage 0  corpus scan (Iceberg/parquet; here: distributed generation)
-  stage 1  NARROW vectorized prep on the nested span arrays — pure
-           Catalyst higher-order functions, whole-stage-codegen'd, no
-           Python, no shuffle:
-             F1 whitespace normalize   transform + regexp_replace/trim
-             F3 degeneration filter    filter + rlike with a Java-regex
-                                       backreference ('(.{2,5})\\1{15}')
-             F4 title '#'-strip        conditional regexp_replace
-  stage 2  the per-doc Arrow kernel (W1-W8, J1-J6, E1-E12, A2-A7 —
-           operators/document.py) via streaming mapInPandas IN THE SAME
-           STAGE: the contract table holds one row per document and rows
-           are partition-atomic, so explode already delivers each doc's
-           spans contiguous — no exchange needed, only a partition-LOCAL
-           sort to restore offset order.  (The former repartition(doc_id)
-           exchange was measured pure overhead: 5.7-5.8 s → 4.6-4.9 s at
+  stage 0  corpus scan of the nested (doc_id, spans) contract rows
+           (Iceberg/parquet; here also distributed generation)
+  stage 1  the per-doc kernel (operators/document.py) over whole document
+           rows via ONE mapInArrow wrapper, _per_doc, shared by all three
+           sinks (spans, markdown, EPUB records/TOC).  The contract table
+           holds one row per document, so each row IS a complete book: no
+           explode, no partition sort, no regrouping.  The kernel itself
+           runs the text prep — F1 whitespace normalize, F3 degenerate-OCR
+           filter, F4 title '#'-strip — and restores offset order
+           (parse_raw_spans).  (The former repartition(doc_id) exchange
+           was measured pure overhead: 5.7-5.8 s → 4.6-4.9 s at
            local[32]/3,200 docs, outputs value-identical.)
-  stage 3  output assembly: flat span rows for downstream relational use,
+  stage 2  output assembly: flat span rows for downstream relational use,
            or re-nested arrays via array_sort(collect_list(struct)) for
            the Iceberg-style sink; per-doc metrics aggregate alongside.
 
+explode_spans + prepare_stage1 keep the JVM form of F1/F3/F4 (Catalyst
+regexp_replace/trim, an rlike backreference filter) for the
+pipeline_stage1_prep query and for prefix-timing probes; extraction does
+not run them.
+
 Skew note (100 TB): documents are independent, so the only skew unit is
 one long book (heavy-tailed page counts).  With the narrow plan the unit
-of work is the scan split; stage 1 filters/normalizes in place and no
-bytes move at all.  A book cannot be split across executors without
-breaking W2's cross-page stitching (sequential by construction in the
-reference, jointer.py:42-96) — that bound holds for any plan.
+of work is the scan split and no bytes move at all.  A book cannot be
+split across executors without breaking W2's cross-page stitching
+(sequential by construction in the reference, jointer.py:42-96) — that
+bound holds for any plan.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from pdf_craft_spark.corpus import parse_raw_spans
+from pdf_craft_spark.operators.document import extract_document, extract_epub_records
 from pdf_craft_spark.schemas import INTERLEAVED_DOC_SCHEMA, OUT_SPAN_SCHEMA
 from pdf_craft_spark.shipping import ensure_package_shipped
 
@@ -103,9 +107,11 @@ def explode_spans(docs: DataFrame) -> DataFrame:
 
 
 def prepare_stage1(flat: DataFrame) -> DataFrame:
-    """Stage 1: F1 → F3 → F4 on flat span rows, in the reference's
-    application order (page_extractor.py:105-123 then jointer.py:181-183)
-    — all Catalyst scalar expressions inside whole-stage codegen, narrow.
+    """F1 → F3 → F4 on flat span rows, in the reference's application
+    order (page_extractor.py:105-123 then jointer.py:181-183) — all
+    Catalyst scalar expressions inside whole-stage codegen, narrow.  The
+    JVM twin of the kernel's own prep (prepare_pages); extraction does not
+    use it.
 
     Parity footnote: the Python kernel's F1 also strips lone surrogates
     (textutil.py remove_surrogates); this JVM stage does not, which is
@@ -135,110 +141,17 @@ def prepare_stage1(flat: DataFrame) -> DataFrame:
     )
 
 
-_OUT_COLS = ["doc_id", "chapter_id", "kind", "text", "media_ref", "offset"]
-
-
-def _doc_spans(pdf: pd.DataFrame):
-    """(doc_id, [(kind, text, media_ref, offset), ...]) per document.
-
-    Documents arrive contiguous (partition sorted by doc_id, offset), so
-    doc boundaries are numpy change-points over the doc_id column and each
-    doc is a plain list slice — measured ~10% of kernel wall was the
-    pandas groupby + per-group Series iteration this replaces.
-
-    Contract guard (fail loud, not corrupt): the zero-shuffle plan is
-    correct only if the contract table holds ONE row per doc_id.  A
-    duplicate row landing in the SAME partition arrives here as repeated
-    (doc_id, offset) pairs after the partition-local sort — one vectorized
-    comparison catches that and raises instead of emitting a silently
-    doubled document.  A duplicate landing in ANOTHER partition is
-    invisible to any single task; enable the table-level assertion
-    (PDF_CRAFT_SPARK_ASSERT_UNIQUE_DOCS=1 / assert_unique_docs=True on
-    the plan builders) to check that before the kernel runs."""
-    import numpy as np
-
-    ids = pdf["doc_id"].to_numpy()
-    offs_arr = pdf["offset"].to_numpy()
-    dup = (ids[1:] == ids[:-1]) & (offs_arr[1:] == offs_arr[:-1])
-    if dup.any():
-        bad = ids[1:][dup][0]
-        raise ValueError(
-            f"contract violation: doc_id {bad!r} has duplicate span offsets in "
-            "one partition — the contract table must hold exactly one row per "
-            "doc_id (duplicate nested rows detected)"
-        )
-    kinds = pdf["kind"].tolist()
-    texts = pdf["text"].tolist()
-    media = pdf["media_ref"].tolist()
-    offs = pdf["offset"].tolist()
-    bounds = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1).tolist(), len(ids)]
-    for i, j in zip(bounds[:-1], bounds[1:]):
-        yield ids[i], list(zip(kinds[i:j], texts[i:j], media[i:j], offs[i:j]))
-
-
-def _extract_block(pdf: pd.DataFrame, stage1_done: bool, boilerplate: bool) -> pd.DataFrame:
-    """Run the per-doc kernel over a block of >=1 complete documents."""
-    from pdf_craft_spark.corpus import parse_raw_spans
-    from pdf_craft_spark.operators.document import extract_document
-
-    out_rows: list[tuple] = []
-    for doc_id, spans in _doc_spans(pdf):
-        pages = parse_raw_spans(spans)
-        _, out_spans = extract_document(
-            pages,
-            toc_assumed=True,
-            stage1_done=stage1_done,
-            boilerplate_strip=boilerplate,
-        )
-        out_rows.extend(
-            (doc_id, s.chapter_id, s.kind, s.text, s.media_ref, s.offset)
-            for s in out_spans
-        )
-    return pd.DataFrame(out_rows, columns=_OUT_COLS)
-
-
-def _make_kernel(stage1_done: bool, boilerplate: bool = False):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        """mapInPandas kernel: the partition arrives doc-sorted; whole
-        Arrow batches are processed at once (pandas groupby inside), with
-        the trailing — possibly incomplete — document carried into the
-        next batch.  This amortizes Arrow/pandas per-call overhead over
-        hundreds of documents instead of paying it per group."""
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_doc = pdf["doc_id"].iloc[-1]
-            is_last = pdf["doc_id"] == last_doc
-            carry = pdf[is_last]
-            complete = pdf[~is_last]
-            if len(complete):
-                yield _extract_block(complete, stage1_done, boilerplate)
-        if carry is not None and len(carry):
-            yield _extract_block(carry, stage1_done, boilerplate)
-
-    return kernel
-
-
-def _check_unique_docs(docs: DataFrame, assert_unique_docs: bool | None) -> None:
+def _check_unique_docs(docs: DataFrame) -> None:
     """Opt-in table-level contract assertion: exactly one row per doc_id.
 
     The zero-shuffle plan relies on this invariant (module docstring); a
-    violation that spans partitions produces two partial documents that no
-    single kernel task can detect (the in-kernel guard in _doc_spans
-    catches the same-partition case for free).  This check is one cheap
-    aggregation job (narrow scan + partial count, no wide rows move), but
-    it IS an extra job, so it's off by default and enabled per-call or via
-    PDF_CRAFT_SPARK_ASSERT_UNIQUE_DOCS=1 in debug/test environments and
-    backfill runs over uncurated tables."""
-    if assert_unique_docs is None:
-        assert_unique_docs = (
-            os.environ.get("PDF_CRAFT_SPARK_ASSERT_UNIQUE_DOCS") == "1"
-        )
-    if not assert_unique_docs:
-        return
+    duplicate row in ANOTHER partition produces two complete documents
+    that no single kernel task can detect (the per-task guard in
+    _per_doc catches the same-task case for free).  This check is one
+    cheap aggregation job (narrow scan + partial count, no wide rows
+    move), but it IS an extra job, so it is off by default and enabled
+    per call (assert_unique_docs=True) in tests and backfill runs over
+    uncurated tables."""
     dup = (
         docs.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -268,40 +181,75 @@ def _ensure_parallelism(docs: DataFrame) -> DataFrame:
     return docs
 
 
-def extract_spans_df(
+def _per_doc(
     docs: DataFrame,
-    stage1: bool = True,
-    boilerplate: bool = False,
-    assert_unique_docs: bool | None = None,
+    fn: Callable[[str, list], list[tuple]],
+    schema: T.StructType | str,
+    assert_unique_docs: bool = False,
+) -> DataFrame:
+    """The one Python kernel boundary: ``fn(doc_id, pages)`` over every
+    nested contract row via mapInArrow, output rows typed by ``schema``.
+
+    Each Arrow batch's ``spans`` list column is read once: the list
+    offsets bound every document's slice of the four struct fields, and
+    parse_raw_spans restores offset order, so no explode, sort or
+    regrouping runs in between.  Each document's output is emitted as its
+    own Arrow batch, so peak Python memory is bounded by the largest book,
+    not by the input batch.  A document with no spans emits no row.
+
+    Contract guard (fail loud, not corrupt): a doc_id seen twice by one
+    task raises instead of emitting a doubled document; duplicates in
+    different tasks need the table-level assert_unique_docs check."""
+    ensure_package_shipped(docs.sparkSession)
+    if assert_unique_docs:
+        _check_unique_docs(docs)
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    out_schema = to_arrow_schema(schema)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        seen: set[str] = set()
+        for batch in batches:
+            spans = batch.column("spans")
+            cols = [spans.values.field(n) for n in ("kind", "text", "media_ref", "offset")]
+            bounds = spans.offsets.to_pylist()
+            for i, doc_id in enumerate(batch.column("doc_id").to_pylist()):
+                if doc_id in seen:
+                    raise ValueError(
+                        f"contract violation: doc_id {doc_id!r} appears twice in "
+                        "one task — the contract table must hold exactly one "
+                        "row per doc_id"
+                    )
+                seen.add(doc_id)
+                lo, hi = bounds[i], bounds[i + 1]
+                if lo == hi:
+                    continue
+                doc_rows = list(zip(*(c[lo:hi].to_pylist() for c in cols)))
+                out = fn(doc_id, parse_raw_spans(doc_rows))
+                if out:
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c, type=f.type) for c, f in zip(zip(*out), out_schema)],
+                        schema=out_schema,
+                    )
+
+    return _ensure_parallelism(docs).select("doc_id", "spans").mapInArrow(kernel, schema)
+
+
+def extract_spans_df(
+    docs: DataFrame, boilerplate: bool = False, assert_unique_docs: bool = False
 ) -> DataFrame:
     """Full extraction: nested contract table in, flat output spans out
-    (doc_id, chapter_id, kind, text, media_ref, offset).
+    (doc_id, chapter_id, kind, text, media_ref, offset)."""
 
-    ZERO-shuffle plan (round 4): the contract table holds ONE ROW PER
-    DOCUMENT and rows are atomic within a partition, so explode_spans
-    already yields every document's spans contiguous — exactly what the
-    kernel's change-point grouping needs.  The old repartition("doc_id")
-    exchange bought nothing but data movement: measured at local[32] /
-    3,200 docs, 4.6-4.9 s vs 5.7-5.8 s with the exchange, outputs
-    value-identical (and at 100 TB the win is structural — extraction is
-    scan-local, no shuffle bytes at all).  A partition-LOCAL sort (no
-    exchange) still runs so unordered spans arrays get their offset
-    order restored, same as the old plan; _ensure_parallelism guards the
-    small-input case where scan partitions < cores."""
-    ensure_package_shipped(docs.sparkSession)
-    _check_unique_docs(docs, assert_unique_docs)
-    flat = explode_spans(_ensure_parallelism(docs))
-    if stage1:
-        flat = prepare_stage1(flat)
-    flat = flat.sortWithinPartitions("doc_id", "offset")
-    return flat.mapInPandas(
-        _make_kernel(stage1_done=stage1, boilerplate=boilerplate),
-        schema=OUT_SPAN_SCHEMA,
-    )
+    def spans(doc_id: str, pages: list) -> list[tuple]:
+        _, out = extract_document(pages, boilerplate_strip=boilerplate)
+        return [(doc_id, s.chapter_id, s.kind, s.text, s.media_ref, s.offset) for s in out]
+
+    return _per_doc(docs, spans, OUT_SPAN_SCHEMA, assert_unique_docs)
 
 
 def to_nested_output(flat_spans: DataFrame) -> DataFrame:
-    """Stage 3: re-nest to the hinted (doc_id, spans) output shape, span
+    """Stage 2: re-nest to the hinted (doc_id, spans) output shape, span
     order restored JVM-side by array_sort on the leading offset field."""
     return (
         flat_spans.groupBy("doc_id")
@@ -318,46 +266,15 @@ def to_nested_output(flat_spans: DataFrame) -> DataFrame:
 MARKDOWN_SCHEMA = "doc_id string, markdown string, n_spans int"
 
 
-def extract_markdown_df(
-    docs: DataFrame, stage1: bool = True, assert_unique_docs: bool | None = None
-) -> DataFrame:
+def extract_markdown_df(docs: DataFrame, assert_unique_docs: bool = False) -> DataFrame:
     """S8: the markdown-file sink as a DataFrame — one rendered markdown
     string per document (same kernel, string output instead of spans)."""
-    ensure_package_shipped(docs.sparkSession)
-    _check_unique_docs(docs, assert_unique_docs)
-    flat = explode_spans(_ensure_parallelism(docs))
-    if stage1:
-        flat = prepare_stage1(flat)
-    flat = flat.sortWithinPartitions("doc_id", "offset")  # narrow, no exchange
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_craft_spark.corpus import parse_raw_spans
-        from pdf_craft_spark.operators.document import extract_document
+    def markdown(doc_id: str, pages: list) -> list[tuple]:
+        md, out = extract_document(pages)
+        return [(doc_id, md, len(out))]
 
-        carry: pd.DataFrame | None = None
-
-        def block(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = []
-            for doc_id, spans in _doc_spans(pdf):
-                md, out_spans = extract_document(
-                    parse_raw_spans(spans), stage1_done=stage1
-                )
-                rows.append((doc_id, md, len(out_spans)))
-            return pd.DataFrame(rows, columns=["doc_id", "markdown", "n_spans"])
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            is_last = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
-            carry = pdf[is_last]
-            if len(pdf[~is_last]):
-                yield block(pdf[~is_last])
-        if carry is not None and len(carry):
-            yield block(carry)
-
-    return flat.mapInPandas(kernel, schema=MARKDOWN_SCHEMA)
+    return _per_doc(docs, markdown, MARKDOWN_SCHEMA, assert_unique_docs)
 
 
 EPUB_RECORD_SCHEMA = (
@@ -371,71 +288,22 @@ EPUB_TOC_SCHEMA = (
 )
 
 
-def _epub_kernel(which: str, stage1: bool):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_craft_spark.corpus import parse_raw_spans
-        from pdf_craft_spark.operators.document import extract_epub_records
-
-        carry: pd.DataFrame | None = None
-
-        def block(pdf: pd.DataFrame) -> pd.DataFrame:
-            rec_rows: list[tuple] = []
-            toc_rows: list[tuple] = []
-            for doc_id, spans in _doc_spans(pdf):
-                rows, tocs = extract_epub_records(
-                    parse_raw_spans(spans), stage1_done=stage1
-                )
-                rec_rows.extend((doc_id, *r) for r in rows)
-                toc_rows.extend(
-                    (doc_id, t.toc_id, t.parent_id, t.pos, t.title, t.has_chapter)
-                    for t in tocs
-                )
-            if which == "records":
-                return pd.DataFrame(
-                    rec_rows,
-                    columns=["doc_id", "chapter_id", "seq", "record", "level",
-                             "text", "latex", "media_ref", "html", "title",
-                             "caption", "footnote_id"],
-                )
-            return pd.DataFrame(
-                toc_rows,
-                columns=["doc_id", "toc_id", "parent_id", "pos", "title",
-                         "has_chapter"],
-            )
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            is_last = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
-            carry = pdf[is_last]
-            if len(pdf[~is_last]):
-                yield block(pdf[~is_last])
-        if carry is not None and len(carry):
-            yield block(carry)
-
-    return kernel
-
-
 def extract_epub_records_df(
-    docs: DataFrame,
-    stage1: bool = True,
-    which: str = "records",
-    assert_unique_docs: bool | None = None,
+    docs: DataFrame, which: str = "records", assert_unique_docs: bool = False
 ) -> DataFrame:
     """S9: the EPUB record sink as a DataFrame — flat
     TextBlock/Formula/Image/Table/Footnote rows per document
     (``which='records'``) or the cleaned TOC tree rows (``which='toc'``);
     same zero-shuffle plan shape as the other sinks."""
-    ensure_package_shipped(docs.sparkSession)
-    _check_unique_docs(docs, assert_unique_docs)
-    flat = explode_spans(_ensure_parallelism(docs))
-    if stage1:
-        flat = prepare_stage1(flat)
-    flat = flat.sortWithinPartitions("doc_id", "offset")  # narrow, no exchange
+
+    def epub(doc_id: str, pages: list) -> list[tuple]:
+        records, tocs = extract_epub_records(pages)
+        if which == "records":
+            return [(doc_id, *r) for r in records]
+        return [(doc_id, t.toc_id, t.parent_id, t.pos, t.title, t.has_chapter) for t in tocs]
+
     schema = EPUB_RECORD_SCHEMA if which == "records" else EPUB_TOC_SCHEMA
-    return flat.mapInPandas(_epub_kernel(which, stage1), schema=schema)
+    return _per_doc(docs, epub, schema, assert_unique_docs)
 
 
 def doc_metrics(flat_spans: DataFrame) -> DataFrame:

@@ -2,7 +2,7 @@
 oracles.
 
 The queries run the pinned 24-document deterministic interleaved corpus
-(GOLDEN_DOCS) through the distributed 3-stage Spark plan in
+(GOLDEN_DOCS) through the distributed Spark plan in
 plans/pipeline.py.  The DuckDB oracle for each reads the matching golden
 parquet under golden/n28/ — materialized by scripts/make_golden.py from the
 LOCAL single-process kernel, which tests/test_document_parity.py proves

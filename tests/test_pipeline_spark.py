@@ -1,6 +1,6 @@
 """The distributed plan must equal the single-process kernel span-for-span
-(kind, text, media_ref, order) — the north-rule invariant — and stage 1's
-JVM prep must be behaviorally identical to the kernel's Python prep."""
+(kind, text, media_ref, order) — the north-rule invariant — for every
+sink, whatever the span order inside a contract row."""
 
 from __future__ import annotations
 
@@ -25,7 +25,7 @@ def _local_truth(doc_id: int) -> list[tuple]:
 
 def test_spark_pipeline_matches_kernel(spark):
     docs = corpus_df(spark, N_DOCS, SEED, partitions=4)
-    flat = extract_spans_df(docs, stage1=True)
+    flat = extract_spans_df(docs)
     rows = flat.collect()
     by_doc: dict[str, list] = {}
     for r in rows:
@@ -37,19 +37,6 @@ def test_spark_pipeline_matches_kernel(spark):
             for r in sorted(doc_rows, key=lambda r: r.offset)
         ]
         assert got == _local_truth(int(doc_id)), f"doc {doc_id} span mismatch"
-
-
-def test_stage1_off_equals_on(spark):
-    docs = corpus_df(spark, 6, SEED, partitions=2)
-    on = {
-        (r.doc_id, r.offset): (r.kind, r.text, r.media_ref)
-        for r in extract_spans_df(docs, stage1=True).collect()
-    }
-    off = {
-        (r.doc_id, r.offset): (r.kind, r.text, r.media_ref)
-        for r in extract_spans_df(docs, stage1=False).collect()
-    }
-    assert on == off
 
 
 def test_nested_output_order(spark):
@@ -83,6 +70,50 @@ def test_markdown_sink_matches_kernel(spark):
         assert got[doc_id] == md, f"doc {doc_id} markdown mismatch"
 
 
+def test_three_sinks_match_kernel_on_40_docs(spark):
+    """Live guard over 40 documents (including the adversarial long, CJK,
+    HTML and PII books, ids 24-27): every sink's Spark output equals the
+    in-process kernel document for document."""
+    from pdf_craft_spark.operators.document import extract_epub_records
+    from pdf_craft_spark.plans.pipeline import (
+        extract_epub_records_df,
+        extract_markdown_df,
+    )
+
+    n = 40
+    docs = corpus_df(spark, n, SEED, partitions=4)
+    spans: dict[str, list] = {}
+    for r in extract_spans_df(docs).collect():
+        spans.setdefault(r.doc_id, []).append(
+            (r.offset, r.chapter_id, r.kind, r.text, r.media_ref)
+        )
+    markdown = {
+        r.doc_id: (r.markdown, r.n_spans) for r in extract_markdown_df(docs).collect()
+    }
+    records: dict[str, list] = {}
+    for r in extract_epub_records_df(docs).collect():
+        records.setdefault(r.doc_id, []).append(tuple(r)[1:])
+    tocs: dict[str, list] = {}
+    for r in extract_epub_records_df(docs, which="toc").collect():
+        tocs.setdefault(r.doc_id, []).append(tuple(r)[1:])
+
+    assert len(spans) == len(markdown) == len(records) == n
+    for doc_id in map(str, range(n)):
+        pages = parse_raw_spans(pages_to_spans(generate_document(int(doc_id), SEED)))
+        md, out = extract_document(pages)
+        want = [(s.offset, s.chapter_id, s.kind, s.text, s.media_ref) for s in out]
+        assert sorted(spans[doc_id]) == want, f"doc {doc_id} spans"
+        assert markdown[doc_id] == (md, len(out)), f"doc {doc_id} markdown"
+        rec_rows, toc_rows = extract_epub_records(pages)
+        assert sorted(records[doc_id], key=repr) == sorted(
+            map(tuple, rec_rows), key=repr
+        ), f"doc {doc_id} epub records"
+        assert sorted(tocs.get(doc_id, []), key=repr) == sorted(
+            ((t.toc_id, t.parent_id, t.pos, t.title, t.has_chapter) for t in toc_rows),
+            key=repr,
+        ), f"doc {doc_id} epub toc"
+
+
 def test_duplicate_doc_rows_fail_loudly_in_kernel(spark):
     """The zero-shuffle plan's precondition is one contract row per
     doc_id.  Duplicate rows co-located in one partition must raise a
@@ -94,6 +125,67 @@ def test_duplicate_doc_rows_fail_loudly_in_kernel(spark):
     dup = docs.unionAll(docs.limit(1)).repartition(1)  # dup rows co-located
     with pytest.raises(Exception, match="contract violation"):
         extract_spans_df(dup).count()
+
+
+def test_duplicate_doc_split_across_batches_fails_loudly(spark):
+    """The per-task duplicate guard spans Arrow batches: with one row per
+    batch the two copies of a document never share a batch."""
+    import pytest
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        docs = corpus_df(spark, 4, SEED, partitions=2)
+        dup = docs.unionAll(docs.limit(1)).repartition(1)
+        with pytest.raises(Exception, match="contract violation"):
+            extract_spans_df(dup).count()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_span_order_inside_a_row_does_not_matter(spark):
+    """Contract rows whose spans arrays are reversed or shuffled give the
+    same output as the offset-sorted rows, on every sink."""
+    import random
+
+    from pdf_craft_spark.plans.pipeline import (
+        extract_epub_records_df,
+        extract_markdown_df,
+    )
+    from pdf_craft_spark.schemas import INTERLEAVED_DOC_SCHEMA
+
+    rows = [
+        (str(d), pages_to_spans(generate_document(d, SEED))) for d in range(4)
+    ]
+    rng = random.Random(7)
+
+    def scrambled(spans, i):
+        spans = list(spans)
+        if i % 2:
+            spans.reverse()
+        else:
+            rng.shuffle(spans)
+        return spans
+
+    sorted_docs = spark.createDataFrame(rows, INTERLEAVED_DOC_SCHEMA)
+    mixed_docs = spark.createDataFrame(
+        [(d, scrambled(s, i)) for i, (d, s) in enumerate(rows)], INTERLEAVED_DOC_SCHEMA
+    )
+    for row in mixed_docs.collect():  # really out of order
+        offsets = [s.offset for s in row.spans]
+        assert offsets != sorted(offsets)
+    sinks = [
+        extract_spans_df,
+        extract_markdown_df,
+        extract_epub_records_df,
+        lambda docs: extract_epub_records_df(docs, which="toc"),
+    ]
+    for sink in sinks:
+        want, got = sink(sorted_docs), sink(mixed_docs)
+        assert want.count() > 0
+        assert want.exceptAll(got).count() == 0
+        assert got.exceptAll(want).count() == 0
 
 
 def test_assert_unique_docs_catches_cross_partition_duplicates(spark):

@@ -42,15 +42,16 @@ def test_a1_scan_pushdown_and_pruning(spark):
 
 
 def test_extraction_has_zero_exchanges(spark):
-    """Round 4: extraction is fully narrow — one row per document means
-    explode already co-locates every doc's spans, so the plan must carry
-    NO exchange at all (only a partition-local sort)."""
+    """Extraction is fully narrow — one row per document is one complete
+    book, so the plan carries NO exchange, no explode (Generate) and no
+    sort: exactly one MapInArrow kernel boundary over the scanned rows."""
     from pdf_craft_spark.plans.pipeline import corpus_df, extract_spans_df
 
     plan = _executed_plan(extract_spans_df(corpus_df(spark, 64)))
     n_exchanges = plan.count("Exchange ")
     assert n_exchanges == 0, f"expected a fully narrow plan, got:\n{plan}"
-    assert "Sort " in plan  # the partition-local offset-order restore
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Generate " not in plan and "Sort " not in plan, plan
 
 
 def test_extraction_rebalances_underpartitioned_input(spark):
