@@ -27,8 +27,11 @@ Skew note (100 TB): documents are independent, so the only skew unit is
 one long book (heavy-tailed page counts).  With the narrow plan the unit
 of work is the scan split and no bytes move at all.  A book cannot be
 split across executors without breaking W2's cross-page stitching
-(sequential by construction in the reference, jointer.py:42-96) — that
-bound holds for any plan.
+(sequential by construction in the reference, jointer.py:42-96), so a
+job can finish no sooner than max(total/cores, largest book).  Where an
+input has fewer splits than cores (_ensure_parallelism), placement aims
+at that bound: each book above total/cores gets its own partition,
+scheduled first, and the rest hash-spread over the remaining ones.
 """
 
 from __future__ import annotations
@@ -37,7 +40,7 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -167,18 +170,47 @@ def _check_unique_docs(docs: DataFrame) -> None:
         )
 
 
+def _heavy_books(docs: DataFrame, cores: int) -> list[str]:
+    """doc_ids of the books costing more than total/cores, largest first.
+
+    One probe job: the cost of a book is ``size(spans)``; the total rides
+    along as an Observation on the same scan, and the take returns at
+    most cores-1 rows (no more than cores-1 books can each exceed
+    total/cores)."""
+    obs = Observation()
+    sizes = docs.select("doc_id", F.size("spans").alias("n"))
+    top = (
+        sizes.observe(obs, F.sum("n").alias("total"))
+        .orderBy(F.desc("n"))
+        .limit(cores - 1)
+        .collect()
+    )
+    total = obs.get["total"] or 0
+    return [r.doc_id for r in top if r.n and r.n * cores > total]
+
+
 def _ensure_parallelism(docs: DataFrame) -> DataFrame:
     """Rebalance ONLY when the source has fewer partitions than cores.
 
-    The rebalance happens at the nested-row level (one row per document),
-    so document atomicity — the zero-shuffle plan's precondition — is
-    preserved by construction.  A 100 TB table has orders of magnitude
-    more splits than executors, so at scale this branch never fires and
-    extraction stays fully narrow."""
-    sc = docs.sparkSession.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism, "doc_id")
-    return docs
+    Then every heavy book (_heavy_books) gets a partition of its own,
+    numbered first so its task is scheduled first, and the other books
+    hash-spread over the remaining partitions: one repartitionById with
+    partition id ``pmod(hash(doc_id), cores - h) + h`` for h heavy books
+    (with h = 0 exactly repartition(cores, "doc_id")).  The rebalance
+    moves whole nested rows (one row per document), so document
+    atomicity — the zero-shuffle plan's precondition — is preserved by
+    construction.  A 100 TB table has orders of magnitude more splits
+    than executors, so at scale this branch never fires and extraction
+    stays fully narrow."""
+    cores = docs.sparkSession.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() >= cores:
+        return docs
+    heavy = _heavy_books(docs, cores)
+    pid = F.pmod(F.hash("doc_id"), F.lit(cores - len(heavy))) + len(heavy)
+    for i, doc_id in enumerate(heavy):
+        # doc_id is data: a Column literal, never spliced into SQL text
+        pid = F.when(F.col("doc_id") == F.lit(doc_id), i).otherwise(pid)
+    return docs.repartitionById(cores, pid)
 
 
 def _per_doc(

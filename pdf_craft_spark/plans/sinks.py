@@ -18,7 +18,12 @@ only; the storage format is a plugin.  Two implementations:
 Contract (what checkpoint.py relies on):
 - ``append_spans`` is atomic-or-absent per call: a crashed run must never
   leave half a document visible (parquet: staging dir rename + _SUCCESS;
-  Iceberg: snapshot commit).
+  Iceberg: snapshot commit).  It returns ``{bucket: (n_docs, n_spans)}``
+  for the rows it wrote (buckets with no rows absent), counted by an
+  Observation on the write itself — no read-back.  ``n_docs`` counts
+  offset-0 rows: output spans number each document from 0
+  (operators/render.py), so under the one-row-per-doc contract that
+  equals ``count(DISTINCT doc_id)``.
 - ``committed_doc_ids`` reflects only fully committed appends (parquet:
   files under the dataset root; Iceberg: the current snapshot).
 - ``append_manifest`` records per-run, per-bucket lineage rows; it lands
@@ -29,7 +34,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -48,6 +53,30 @@ def bucket_expr(n_buckets: int):
         F.conv(F.substring(F.md5(F.col("doc_id")), 1, 6), 16, 10).cast("long"),
         F.lit(n_buckets),
     )
+
+
+def _bucketed(flat: DataFrame, n_buckets: int) -> tuple[DataFrame, Observation]:
+    """``flat`` plus its bucket column, carrying an Observation of the
+    per-bucket doc and span counts for _bucket_counts: two metrics, one
+    array expression each, so the driver builds two Columns, not
+    2 x n_buckets.  Both sinks write this same explicit bucket column,
+    which keeps the manifest's per-bucket lineage sink-agnostic."""
+
+    def per_bucket(cond: str) -> Column:
+        return F.expr(
+            "array(" + ", ".join(f"count_if(bucket = {b}{cond})" for b in range(n_buckets)) + ")"
+        )
+
+    obs = Observation()
+    flat = flat.withColumn("bucket", bucket_expr(n_buckets)).observe(
+        obs, per_bucket(" AND `offset` = 0").alias("docs"), per_bucket("").alias("spans")
+    )
+    return flat, obs
+
+
+def _bucket_counts(obs: Observation) -> dict[int, tuple[int, int]]:
+    m = obs.get
+    return {b: (d, s) for b, (d, s) in enumerate(zip(m["docs"], m["spans"])) if s}
 
 
 class ParquetBucketSink:
@@ -73,26 +102,24 @@ class ParquetBucketSink:
     def committed_doc_ids(self, spark: SparkSession) -> DataFrame | None:
         """Doc ids already durable, or None on first run.
 
-        Only PATH_NOT_FOUND means "first run" — any other read failure
-        (storage hiccup, permissions, corrupt footer) must PROPAGATE:
+        Only a missing dataset directory (Hadoop ``FileSystem.exists``)
+        means "first run" — any read failure (storage hiccup, permissions,
+        corrupt footer) must PROPAGATE:
         treating it as first-run would skip the left-anti join and append
         duplicates of everything already committed.
 
         Iceberg: ``SELECT DISTINCT doc_id FROM cat.db.spans`` — snapshot
         isolation makes 'committed' exact instead of directory-listing
         approximate; no None case (an empty table is just empty)."""
-        from pyspark.errors import AnalysisException
+        path = spark._jvm.org.apache.hadoop.fs.Path(self._spans_path())
+        if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+            return None  # first run: nothing committed yet
+        return spark.read.parquet(self._spans_path()).select("doc_id").distinct()
 
-        try:
-            return spark.read.parquet(self._spans_path()).select("doc_id").distinct()
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" in str(exc):
-                return None  # first run: nothing committed yet
-            raise
-
-    def append_spans(self, flat: DataFrame) -> None:
+    def append_spans(self, flat: DataFrame) -> dict[int, tuple[int, int]]:
         """Append span rows bucket-partitioned; Spark's commit protocol
         (task staging + job-level rename + _SUCCESS) gives append-or-absent.
+        Returns the written rows' ``{bucket: (n_docs, n_spans)}``.
 
         Iceberg: ``flat.writeTo('cat.db.spans').append()`` — one atomic
         snapshot; concurrent runs serialize via optimistic retry.  Resume
@@ -100,8 +127,9 @@ class ParquetBucketSink:
         if dedup-on-write were ever needed:
         ``MERGE INTO spans t USING delta s ON t.doc_id = s.doc_id AND
         t.offset = s.offset WHEN NOT MATCHED THEN INSERT *``."""
-        flat = flat.withColumn("bucket", bucket_expr(self.n_buckets))
+        flat, obs = _bucketed(flat, self.n_buckets)
         flat.write.mode("append").partitionBy("bucket").parquet(self._spans_path())
+        return _bucket_counts(obs)
 
     def read_spans(self, spark: SparkSession) -> DataFrame:
         """Full committed dataset.  mergeSchema: output dirs written before
@@ -157,22 +185,17 @@ class IcebergSink:
                     "to spark.jars and configure spark.sql.catalog.<name>"
                 ) from exc
 
-    def _with_bucket(self, flat: DataFrame) -> DataFrame:
-        # an explicit bucket column (identical hash to the parquet sink)
-        # keeps the manifest's per-bucket lineage sink-agnostic; the table
-        # is ALSO physically partitioned by it
-        return flat.withColumn("bucket", bucket_expr(self.n_buckets))
-
     def committed_doc_ids(self, spark: SparkSession) -> DataFrame | None:
         if not self._exists:
             return None
         return spark.table(self.table).select("doc_id").distinct()
 
-    def append_spans(self, flat: DataFrame) -> None:
-        flat = self._with_bucket(flat)
+    def append_spans(self, flat: DataFrame) -> dict[int, tuple[int, int]]:
+        # the table is physically partitioned by the explicit bucket column
+        flat, obs = _bucketed(flat, self.n_buckets)
         if self._exists:
             flat.writeTo(self.table).append()  # one atomic snapshot
-            return
+            return _bucket_counts(obs)
         # the cached _exists probe can be stale (table created concurrently
         # or externally after the constructor ran): treat ALREADY_EXISTS
         # from create() as "someone else won the race" and retry as an
@@ -184,6 +207,7 @@ class IcebergSink:
                 raise
             flat.writeTo(self.table).append()
         self._exists = True
+        return _bucket_counts(obs)
 
     def read_spans(self, spark: SparkSession) -> DataFrame:
         return spark.table(self.table)

@@ -200,3 +200,58 @@ def test_assert_unique_docs_catches_cross_partition_duplicates(spark):
     dup = docs.unionAll(docs.limit(1))
     with pytest.raises(ValueError, match="contract violation"):
         extract_spans_df(dup, assert_unique_docs=True)
+
+
+def test_heavy_book_gets_its_own_partition(spark):
+    """An under-partitioned input is rebalanced by cost: a book holding
+    more than total/cores of the spans sits alone in partition 0 (its
+    task is scheduled first), the rest hash-spread over the other
+    partitions, and the output still equals the in-process kernel.  The
+    heavy book's doc_id carries a quote: doc ids go into the plan as
+    Column literals, never as SQL text."""
+    from pyspark.sql import functions as F
+
+    from pdf_craft_spark.plans.pipeline import _ensure_parallelism
+    from pdf_craft_spark.schemas import INTERLEAVED_DOC_SCHEMA
+
+    cores = spark.sparkContext.defaultParallelism
+    heavy = "it's 24"  # corpus doc 24 is the 520-page adversarial book
+    ids = {d: heavy if d == 24 else str(d) for d in range(16, 32)}
+    books = {ids[d]: pages_to_spans(generate_document(d, SEED)) for d in ids}
+    assert len(books[heavy]) * cores > sum(map(len, books.values()))
+    docs = spark.createDataFrame(list(books.items()), INTERLEAVED_DOC_SCHEMA).coalesce(1)
+
+    placed = _ensure_parallelism(docs).select(
+        "doc_id",
+        F.spark_partition_id().alias("pid"),
+        (F.pmod(F.hash("doc_id"), F.lit(cores - 1)) + 1).alias("spread"),
+    ).collect()
+    assert len(placed) == len(books)
+    assert [r.doc_id for r in placed if r.pid == 0] == [heavy]
+    assert all(r.pid == r.spread for r in placed if r.doc_id != heavy)
+
+    got: dict[str, list] = {}
+    for r in extract_spans_df(docs).collect():
+        got.setdefault(r.doc_id, []).append((r.offset, r.chapter_id, r.kind, r.text, r.media_ref))
+    assert set(got) == set(books)
+    for doc_id, spans in books.items():
+        _, out = extract_document(parse_raw_spans(spans))
+        want = [(s.offset, s.chapter_id, s.kind, s.text, s.media_ref) for s in out]
+        assert sorted(got[doc_id]) == want, f"doc {doc_id!r} spans"
+
+
+def test_rebalance_without_heavy_books_is_the_hash_spread(spark):
+    """With no heavy book the rebalance is today's repartition(cores,
+    doc_id): each document lands in partition pmod(hash(doc_id), cores)."""
+    from pyspark.sql import functions as F
+
+    from pdf_craft_spark.plans.pipeline import _ensure_parallelism
+
+    cores = spark.sparkContext.defaultParallelism
+    docs = corpus_df(spark, 8, SEED, partitions=1)  # no book above total/cores
+    placed = _ensure_parallelism(docs).select(
+        F.spark_partition_id().alias("pid"),
+        F.pmod(F.hash("doc_id"), F.lit(cores)).alias("spread"),
+    ).collect()
+    assert len(placed) == 8
+    assert all(r.pid == r.spread for r in placed)
