@@ -12,16 +12,11 @@ never appears — concentration is measured with the Simpson/HHI index
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _md5pl
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 # --- exact mode per group ---------------------------------------------------
@@ -34,7 +29,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # partial-agg shuffles bounded by distinct (brand, size).
 def mode_exact_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnts = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .groupBy("p_brand", "p_size")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -90,14 +85,14 @@ ORDER BY p_brand
 # The crossing row is included: kept rows are those whose cumulative sum
 # MINUS own revenue is still below the threshold.
 def topp_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("long")
         .alias("cents"),
     )
     sup_rev = li.groupBy("l_suppkey").agg(F.sum("cents").alias("rev_c"))
-    sup = _t(spark, sf_dir, "supplier").select(
+    sup = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
     )
     per_sup = sup_rev.join(F.broadcast(sup), "l_suppkey")
@@ -173,7 +168,7 @@ VOCAB_K = 29
 
 def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             F.explode(
@@ -238,7 +233,7 @@ ORDER BY doc_id
 # sum(cnt^2) <= n^2 and n is per-document.
 def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             F.explode(
@@ -298,7 +293,7 @@ WIN_US = 6 * 3600 * 1_000_000
 
 
 def session_window_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # `us` is monotone in ts, so ordering by (us, event_id) is the same
     # session order as (ts, event_id) with the raw timestamp pruned away.
     w = W.partitionBy("user_id").orderBy("us", "event_id")
@@ -414,7 +409,7 @@ MIXTURE_SHARES_PPM: tuple[tuple[str, int], ...] = (
 
 
 def mixture_plan_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "lang",
         F.size(F.expr("regexp_extract_all(text, '[a-z]+', 0)")).cast(
             "long"
@@ -499,7 +494,7 @@ def _fp_hash(engine: str) -> str:
 
 def table_fingerprint_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bp = _md5pl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 10000"
-    base = _t(spark, sf_dir, "orders").selectExpr(
+    base = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey", "o_orderstatus", "o_totalprice", f"({bp}) AS bp"
     )
     replica = base.filter(F.col("bp") < FP_DEL_BP).selectExpr(
@@ -590,7 +585,7 @@ ORDER BY bucket
 # pick the first value where 2*cum >= total.  Weights, cumulative sums and
 # the predicate are all integer; no raw-row sort or window anywhere.
 def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("long")
@@ -660,7 +655,7 @@ ORDER BY l_returnflag
 # documented convention on BOTH engines is twap = max(mils) —
 # deterministic where a "pick any" would not be.
 def twap_value_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
@@ -735,7 +730,7 @@ CDC_DEL_BP = 9970
 
 def cdc_compact_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bp = _md5pl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 10000"
-    base = _t(spark, sf_dir, "orders").selectExpr(
+    base = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "o_orderstatus",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
@@ -836,7 +831,7 @@ ZM_HI = "1996-06-30"
 
 def zonemap_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = _md5pl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 64"
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "CAST(o_orderdate AS DATE) AS d",
         "(year(o_orderdate) * 12 + month(o_orderdate) - 1) AS file_clustered",
@@ -938,7 +933,7 @@ ORDER BY layout
 # group (6 types per brand here); the agg stays combinable.
 def grouped_ordered_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .groupBy("p_brand")
         .agg(
             F.array_join(
@@ -970,7 +965,7 @@ ORDER BY p_brand
 # SAME one-shuffle window partition (running max, then max gap), exact
 # integer cents, deterministic (date, orderkey) ordering.
 def running_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
         "o_orderdate",
@@ -1040,7 +1035,7 @@ BAND_EPS_CENTS = 50
 
 
 def price_band_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_type",
         (F.col("p_retailprice").cast("decimal(18,2)") * 100)
@@ -1125,7 +1120,7 @@ KS_SPLIT_DATE = "1998-01-01"
 
 
 def ks_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         (F.col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")
         .alias("cents"),
@@ -1241,7 +1236,7 @@ GROUP BY t.na, t.nb
 # recipe so the diff is a small, checkable set.
 def except_all_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
     bp = _md5pl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 10000"
-    base = _t(spark, sf_dir, "orders").selectExpr(
+    base = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderstatus",
         "o_orderpriority",
         f"({bp}) AS bp",
@@ -1315,7 +1310,7 @@ ORDER BY o_orderstatus, o_orderpriority
 # bounded per-label ordered concat (the array-free CSV output the
 # canonicalizer requires).
 def embedding_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "label", F.posexplode("embedding").alias("dim", "x")
     )
     dims = e.select(
@@ -1396,7 +1391,7 @@ K_ANON = 5
 
 
 def kanonymity_quasi_identifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").selectExpr(
+    c = load_table(spark, sf_dir, "customer").selectExpr(
         "c_mktsegment",
         "c_nationkey",
         # decile-style generalization: 1000-dollar balance bands
@@ -1445,12 +1440,12 @@ ORDER BY c_mktsegment, c_nationkey, bal_band
 # dry-run and an accidental row explosion.
 def join_fanout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("k"))
         .agg(F.count(F.lit(1)).alias("cnt_l"))
     )
     rc = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_custkey").alias("k"))
         .agg(F.count(F.lit(1)).alias("cnt_r"))
     )
@@ -1499,7 +1494,7 @@ FROM lo JOIN rc USING (k)
 # libm: ceil(log2(n)) == length(bin(n-1)) for n >= 2 (bit-width of n-1),
 # an integer/string identity both engines evaluate exactly.
 def length_bucket_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         F.size(F.expr("regexp_extract_all(text, '[a-z]+', 0)")).cast(
             "long"
         ).alias("n_tok")
@@ -1570,7 +1565,7 @@ ORDER BY bucket
 # divides.  One window for the rank (per-customer, bounded), one
 # combinable agg for the moments.
 def trend_slope_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
         "o_orderdate",
@@ -1641,7 +1636,7 @@ ORDER BY o_custkey
 # ceiling — has no such identity and would need the applyInPandas tier
 # that pack_greedy_exact demonstrates.)  All state integer mils.
 def clamped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id",
         "event_id",
         "unix_micros(CAST(ts AS TIMESTAMP)) AS us",
@@ -1737,9 +1732,9 @@ def fd_violation_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_dep").alias("max_dependents"),
         )
 
-    part = _t(spark, sf_dir, "part")
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    part = load_table(spark, sf_dir, "part")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         audit(part, "p_brand", "p_type", "p_brand->p_type")
         .unionByName(
@@ -1810,7 +1805,7 @@ STRAT_QUOTA = 40
 
 def stratified_fixed_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = _md5pl("CAST(doc_id AS STRING)", 12, "spark")
-    d = _t(spark, sf_dir, "documents").selectExpr(
+    d = load_table(spark, sf_dir, "documents").selectExpr(
         "doc_id", "lang", f"({pr}) AS priority"
     )
     w = W.partitionBy("lang").orderBy("priority", "doc_id")
@@ -1859,7 +1854,7 @@ PAGE_SIZE = 20
 
 
 def keyset_page_3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
     anchor = (
@@ -1919,7 +1914,7 @@ def trending_parts_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter on the RAW day difference: truncating DIV maps -179..-1 to
     # bucket 0, so an age_bucket >= 0 filter would silently admit
     # post-anchor rows the oracle excludes
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_partkey",
         f"CAST(datediff(DATE '{DECAY_ANCHOR}', CAST(l_shipdate AS DATE))"
         " AS BIGINT) AS age_days",
@@ -1978,7 +1973,7 @@ LIMIT {TREND_TOPK}
 # unnormalized batch shows up as a norm band away from 1e12 (1.0 in
 # micro^2).  One per-vector combinable agg, one per-label rollup.
 def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.explode("embedding").alias("x")
     )
     per_vec = (
@@ -2044,7 +2039,7 @@ SHARD_N = 16
 
 def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _md5pl("CAST(doc_id AS STRING)", 6, "spark") + f" % {SHARD_N}"
-    d = _t(spark, sf_dir, "documents").selectExpr(
+    d = load_table(spark, sf_dir, "documents").selectExpr(
         f"({sh}) AS shard",
         "size(regexp_extract_all(text, '[a-z]+', 0)) AS n_tok",
     )
@@ -2098,7 +2093,7 @@ ORDER BY shard
 # spanning >1 language survive, with the languages listed
 # deterministically.
 def crosslingual_duplicate_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         F.md5(
@@ -2163,14 +2158,14 @@ ORDER BY fp
 # are safe under any consistent permutation (equal values contribute the
 # same group total).  All integer cents; gini_ppm = 1e6 * num / (n * sum).
 def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("long")
         .alias("cents"),
     )
     sup_rev = li.groupBy("l_suppkey").agg(F.sum("cents").alias("rev"))
-    sup = _t(spark, sf_dir, "supplier").select(
+    sup = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
     )
     per = sup_rev.join(F.broadcast(sup), "l_suppkey")
@@ -2243,7 +2238,7 @@ def _bday_f(col: str, engine: str) -> str:
 
 
 def business_day_reorder_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         "o_orderkey",
         "CAST(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01')"
@@ -2304,7 +2299,7 @@ SERVICE_WINDOW_DAYS = 7
 
 
 def covered_days_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         "o_orderkey",
         "CAST(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01')"
@@ -2391,7 +2386,7 @@ ORDER BY o_custkey
 # float.  percentile here = fraction of rows with value <= this value
 # (cume_dist semantics), the one that is well-defined under ties.
 def price_percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_type",
         (F.col("p_retailprice").cast("decimal(18,2)") * 100)
         .cast("long")
@@ -2449,7 +2444,7 @@ ORDER BY p_type, cents
 # the deduped (type, user) table.
 def distinct_rollup_pitfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tu = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select("event_type", "user_id")
         .distinct()
     )
@@ -2594,7 +2589,7 @@ def token_bucket_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per SHARD (64-way user hash) hands it 64 frames and walks each
     # user's slice inside the kernel — identical semantics, the
     # sequential unit is still the single user.
-    ev = _t(spark, sf_dir, "events").selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id",
         "CAST(user_id % 64 AS INT) AS shard",
         "event_id",
@@ -2703,8 +2698,10 @@ L_DIVERSITY = 3
 
 
 def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").selectExpr("c_custkey", "c_mktsegment", "c_nationkey")
-    o = _t(spark, sf_dir, "orders").selectExpr("o_custkey", "o_orderpriority")
+    c = load_table(spark, sf_dir, "customer").selectExpr(
+        "c_custkey", "c_mktsegment", "c_nationkey"
+    )
+    o = load_table(spark, sf_dir, "orders").selectExpr("o_custkey", "o_orderpriority")
     released = o.join(c, o.o_custkey == c.c_custkey)
     vals = released.groupBy("c_mktsegment", "c_nationkey", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("nv")
@@ -2778,10 +2775,10 @@ T_CLOSENESS_PPM = 150_000  # flag classes with EMD > 0.15
 
 
 def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").selectExpr(
+    c = load_table(spark, sf_dir, "customer").selectExpr(
         "c_custkey", "c_mktsegment", "c_nationkey"
     )
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         # ordered sensitive attribute: $50k order-value bands
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -2924,8 +2921,8 @@ SKEW_SALT_S = 8
 def skew_salting_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     keys = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
@@ -3047,9 +3044,9 @@ ORACLES["skew_salting_advisor"] = SKEW_SALTING_ADVISOR_SQL
 # the difference between shuffling 6 rows per order or 1 — for the cost
 # of three tiny aggregations.
 def join_order_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
     li_k = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n_li"))
     # orders are unique per orderkey; per-customer order multiplicity
     o_cust = o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n_o"))
@@ -3149,7 +3146,7 @@ def lpt_shard_scheduling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_shipped(spark)
     costs = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .selectExpr(f"CAST(l_suppkey % {LPT_SHARDS} AS BIGINT) AS shard")
         .groupBy("shard")
         .agg(F.count(F.lit(1)).cast("long").alias("cost"))
@@ -3272,7 +3269,7 @@ ORACLES["lpt_shard_scheduling"] = LPT_SHARD_SCHEDULING_SQL
 # per-segment sums widen to DECIMAL(38,0) with the divisions restaged
 # (the spearman/tfidf precedent).
 def pvm_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderpriority AS seg",
         "CAST(o_orderdate AS DATE) AS d",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
@@ -3378,7 +3375,7 @@ def consistent_hash_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # workers derive from supplier ids so the ring is corpus-anchored
     h = md5_prefix_long_sql("concat(w, ':', v)", 10, "spark")
     workers = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .selectExpr(f"CAST(s_suppkey % {CH_WORKERS} AS BIGINT) AS w")
         .distinct()
     )
@@ -3482,7 +3479,7 @@ SNAPSHOT_ASOF_V = 1
 
 def snapshot_asof_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     bp = _md5pl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 10000"
-    base = _t(spark, sf_dir, "orders").selectExpr(
+    base = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "o_orderstatus",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",

@@ -12,14 +12,10 @@ session-timezone-free in both engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 # --- ordered funnel ----------------------------------------------------------
@@ -28,7 +24,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # user partition (three window passes, one shuffle): t_click must follow
 # the user's first signup, t_purchase must follow that click.
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).select("user_id", "event_type", "ts")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     w = W.partitionBy("user_id")
     staged = (
         ev.withColumn(
@@ -108,7 +104,7 @@ FROM staged
 # (one row per user) joined back onto the deduped (user, day) activity —
 # both sides key on user_id, so the join rides the same shuffle.
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("date").alias("day")
     )
     activity = ev.distinct()
@@ -151,7 +147,9 @@ TRANSITION_PPM = 1_000_000
 
 
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).select("user_id", "event_type", "ts", "event_id")
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "event_id"
+    )
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         ev.withColumn("to_type", F.lead("event_type").over(w))
@@ -290,7 +288,7 @@ ORACLES = {
 # already the scalable shape.  Recency anchors to the corpus's own max
 # order date (1-row broadcast), not wall-clock, so results are stable.
 def ntile_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count("*").alias("freq"),
@@ -367,7 +365,9 @@ PATH_TOPK = 20
 
 
 def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).select("user_id", "event_type", "ts", "event_id")
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "event_id"
+    )
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     tri = (
         ev.withColumn("t2", F.lead("event_type", 1).over(w))
@@ -432,7 +432,7 @@ CEP_PATTERN = "s[vc]*p"
 
 
 def cep_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     seqs = ev.groupBy("user_id").agg(
         F.expr(
             "array_join(transform(array_sort(collect_list("
@@ -573,7 +573,7 @@ ORACLES["recsys_item_cooccurrence_topk"] = RECSYS_ITEM_COOCCURRENCE_TOPK_SQL
 # partitioning.  Timestamps are emitted via date_format (tz-offset-free,
 # the proven cross-engine spelling).
 def event_compact_consecutive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         "ts",
@@ -666,7 +666,7 @@ ORACLES["event_compact_consecutive"] = EVENT_COMPACT_CONSECUTIVE_SQL
 # identity sum(alloc) == sum_part min(supply, demand), and a weighted
 # pair checksum that pins WHICH receipt fed WHICH issue.
 def fifo_inventory_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_partkey AS pk",
         "l_orderkey",
         "l_linenumber",
@@ -906,7 +906,7 @@ def event_order_inversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
     h = md5_prefix_long_sql("CAST(event_id AS STRING)", 10, "spark")
-    ev = _events(spark, sf_dir).selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id",
         "event_id",
         "unix_micros(CAST(ts AS TIMESTAMP)) AS us",
@@ -995,7 +995,7 @@ RANK_CHURN_TOP = 15
 
 
 def rank_churn_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_suppkey",
         "CAST(l_shipdate AS DATE) AS d",
         "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",

@@ -14,16 +14,11 @@ reason.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 QUERIES: dict = {}
@@ -48,7 +43,7 @@ PHRASE_TOPK = 20
 
 
 def phrase_query_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.posexplode(F.expr(f"regexp_extract_all(text, '{_TOK_RE}', 0)")).alias(
@@ -105,7 +100,7 @@ ORACLES["phrase_query_positional"] = PHRASE_QUERY_POSITIONAL_SQL
 # expression.  R² comes from the same components.  No second pass, no
 # collect, no gradient loop.
 def ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").selectExpr(
+    p = load_table(spark, sf_dir, "part").selectExpr(
         "CAST(p_size AS BIGINT) AS x1",
         "CAST(length(p_type) AS BIGINT) AS x2",
         "CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y",
@@ -221,7 +216,7 @@ ORACLES["ols_normal_equations"] = OLS_NORMAL_EQUATIONS_SQL
 # the single final double division, reported in micro.  One token shuffle,
 # one broadcast of the vocab-sized global count table.
 def corpus_tv_distance_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("source", "text")
+    docs = load_table(spark, sf_dir, "documents").select("source", "text")
     toks = docs.select(
         "source",
         F.explode(F.expr(f"regexp_extract_all(text, '{_TOK_RE}', 0)")).alias("t"),
@@ -304,7 +299,7 @@ SAT_BUCKETS = 10
 
 
 def dedup_saturation_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     lim = docs.agg((F.max("doc_id") + 1).cast("long").alias("lim"))
     bucketed = docs.crossJoin(F.broadcast(lim)).selectExpr(
         "doc_id",
@@ -401,7 +396,7 @@ def epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = md5_prefix_long_sql(
         f"concat('{EPOCH_SEED}:', CAST(doc_id AS STRING))", 15, "spark"
     )
-    docs = _t(spark, sf_dir, "documents").selectExpr(
+    docs = load_table(spark, sf_dir, "documents").selectExpr(
         "doc_id", f"{key} AS hkey"
     ).selectExpr(
         "doc_id", "hkey", f"CAST(hkey % {N_SHUFFLE_SHARDS} AS INT) AS shard"
@@ -447,7 +442,7 @@ CHI2_TOPK = 3
 
 
 def chi2_terms_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("source", "text")
+    docs = load_table(spark, sf_dir, "documents").select("source", "text")
     toks = docs.select(
         "source",
         F.explode(F.expr(f"regexp_extract_all(text, '{_TOK_RE}', 0)")).alias("t"),

@@ -9,17 +9,12 @@ DuckDB ``//`` (both truncate toward zero), no transcendental functions.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 from pdf_craft_spark.queries.indexing import Z_EPOCH, _hilbert_step, _zorder_terms
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 QUERIES: dict = {}
@@ -42,7 +37,7 @@ ER_BLOCK_CENTS = 50_000  # $500 buckets
 
 
 def blocking_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _t(spark, sf_dir, "customer").selectExpr(
+    base = load_table(spark, sf_dir, "customer").selectExpr(
         "c_nationkey AS nk",
         "c_mktsegment AS seg",
         f"(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)) DIV {ER_BLOCK_CENTS} AS blk",
@@ -131,7 +126,7 @@ CURVE_SHARD = 1024
 
 
 def _curve_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _t(spark, sf_dir, "orders").selectExpr(
+    base = load_table(spark, sf_dir, "orders").selectExpr(
         f"CAST(o_custkey & {CURVE_N - 1} AS BIGINT) AS x0",
         f"CAST(datediff(CAST(o_orderdate AS DATE), DATE '{Z_EPOCH}')"
         f" & {CURVE_N - 1} AS BIGINT) AS y0",
@@ -263,7 +258,7 @@ ED1_POSITIONS = 9
 
 
 def edit1_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    digits = _t(spark, sf_dir, "customer").selectExpr(
+    digits = load_table(spark, sf_dir, "customer").selectExpr(
         "substring(c_name, 10, 9) AS dg"
     )
     masked = digits.selectExpr(
@@ -322,7 +317,7 @@ ZIPF_TOPK = 20
 
 
 def zipf_rank_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("text")
+    docs = load_table(spark, sf_dir, "documents").select("text")
     toks = docs.select(
         F.explode(F.expr("regexp_extract_all(text, '[a-z]+', 0)")).alias("t")
     )
@@ -383,7 +378,7 @@ def group_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         md5_prefix_long_sql("concat('gkf:', CAST(user_id AS STRING))", 6, "spark")
         + f" % {KFOLDS}"
     )
-    ev = _t(spark, sf_dir, "events").selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id", f"CAST({fold} AS INT) AS fold"
     )
     total = ev.agg(F.count(F.lit(1)).cast("long").alias("n_tot"))

@@ -9,14 +9,10 @@ projection expression over identical exact inputs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 QUERIES: dict = {}
@@ -32,7 +28,7 @@ ORACLES: dict = {}
 # rank windows (bounded groups), zero doubles anywhere: MAD in cents is
 # the deliverable.
 def mad_price_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_brand",
         (F.col("p_retailprice").cast("decimal(18,2)") * 100).cast("long").alias("v"),
     )
@@ -124,7 +120,7 @@ def basket_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_artifact(
         spark,
         f"basket:{sf_dir}",
-        lambda: _t(spark, sf_dir, "lineitem")
+        lambda: load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct(),
     )
@@ -229,7 +225,7 @@ ORACLES["graph_edge_support"] = GRAPH_EDGE_SUPPORT_SQL
 # weight table itself is sources-sized (bounded).
 def temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ns = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
         .selectExpr(
@@ -380,7 +376,7 @@ KWIC_TOPK = 20
 
 
 def kwic_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.posexplode(F.expr("regexp_extract_all(text, '[a-z]+', 0)")).alias(

@@ -24,8 +24,8 @@ from pdf_craft_spark.queries.similarity import (
     DIM,
     N_QUERIES,
     TOP_K,
-    _emb,
 )
+from pdf_craft_spark.sources import load_table
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -55,7 +55,7 @@ _CODE_DUCK = (
 
 
 def sim_binary_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     codes = emb.selectExpr(
         "vec_id",
         f"({_CODE_SPARK.format(off=0)}) AS c_lo",

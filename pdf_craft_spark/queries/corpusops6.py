@@ -14,14 +14,10 @@ moment determinants (the ols_normal_equations recipe).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 QUERIES: dict = {}
@@ -44,7 +40,7 @@ AUC_LABELS = (0, 1, 2)
 
 def auc_exact_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "label", F.posexplode("embedding").alias("pos", "x"))
         .select(
             "vec_id",
@@ -160,7 +156,7 @@ CUPED_CUTOFF = "2024-01-15"
 
 
 def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id",
         "CAST(ts AS DATE) AS d",
         "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
@@ -280,7 +276,7 @@ RANK_SAMPLE_MOD = 101
 
 
 def window_rank_semantics_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "o_orderpriority AS priority",
         "CAST(floor(CAST(o_totalprice AS DOUBLE) / 100) AS BIGINT) AS band",
@@ -369,7 +365,7 @@ BURST_TOK_RE = "[a-z]{3,}"
 
 
 def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     per_dt = (
         docs.select(
@@ -436,15 +432,15 @@ ORACLES["term_burstiness"] = TERM_BURSTINESS_SQL
 # lineitem->part) then two nested aggregates — all equi-joins, the small
 # dims broadcast by AQE.
 def market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_orderkey",
         "l_partkey",
         "CAST(floor(CAST(l_extendedprice AS DOUBLE)) AS BIGINT) AS dollars",
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     per_nb = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)

@@ -13,14 +13,10 @@ part names cannot hit)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 QUERIES: dict = {}
@@ -86,7 +82,7 @@ def er_jaro_winkler_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_shipped(spark)
     names = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .select("p_name")
         .distinct()
         .selectExpr("p_name", "element_at(split(p_name, ' '), -1) AS block")
@@ -139,7 +135,7 @@ MNN_BUCKET_BITS = 4
 
 
 def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     # quantized vectors stay ARRAYS: the per-pair dot is an int64 fold
     # over zip_with (order-free exact integer sum — any evaluation order
     # gives the identical value), so the scorer is two BROADCAST joins of
@@ -249,7 +245,7 @@ LIFT_DECILES = 10
 
 def lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "label", F.posexplode("embedding").alias("pos", "x"))
         .select(
             "vec_id",
@@ -356,7 +352,7 @@ DI_MIN_CHARS = 300
 
 
 def filter_disparate_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").selectExpr(
+    docs = load_table(spark, sf_dir, "documents").selectExpr(
         "lang",
         f"CASE WHEN n_chars >= {DI_MIN_CHARS} THEN 1 ELSE 0 END AS pass_flag",
     )

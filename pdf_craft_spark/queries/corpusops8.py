@@ -10,14 +10,10 @@ DuckDB oracle."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 QUERIES: dict = {}
@@ -39,7 +35,7 @@ WF_BUDGET_NUM, WF_BUDGET_DEN = 6, 10  # B = 60% of total tokens
 
 def token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_src = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select(
             "source",
             F.size(F.expr("regexp_extract_all(text, '[a-z]{3,}', 0)")).alias("nt"),
@@ -127,13 +123,15 @@ ORACLES["token_budget_waterfill"] = TOKEN_BUDGET_WATERFILL_SQL
 # Revenue in cents (DECIMAL bridge), shares by integer DIV; two window
 # partitions express the whole hierarchy with zero self-joins.
 def hierarchy_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
     per_nation = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -193,7 +191,7 @@ FD_COLS = ("status", "prio", "yr", "mon", "bucket")
 
 
 def fd_discovery_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderstatus AS status",
         "o_orderpriority AS prio",
         "year(o_orderdate) AS yr",
@@ -269,7 +267,7 @@ PARETO_PCTS = (1, 5, 10, 20, 50)
 
 def pareto_concentration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cust = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .selectExpr(
             "o_custkey",
             "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",

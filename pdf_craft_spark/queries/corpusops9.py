@@ -11,14 +11,10 @@ no such guarantee."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 QUERIES: dict = {}
@@ -123,7 +119,7 @@ CLUSTER_TAKE = 20
 
 
 def cluster_sample_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id",
         "event_id",
         "ts",
@@ -238,7 +234,7 @@ DID_CUTOFF = "2024-01-15"
 
 
 def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id % 2 AS arm",
         f"CASE WHEN CAST(ts AS DATE) < DATE '{DID_CUTOFF}' THEN 0 ELSE 1 END AS period",
         "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
@@ -309,7 +305,7 @@ ORACLES["did_estimator"] = DID_ESTIMATOR_SQL
 # one min-window, the curve one cumulative-sum window; everything
 # integer until the final per-member division.
 def ltv_cohort_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         "year(o_orderdate) AS yr",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",

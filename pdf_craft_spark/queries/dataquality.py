@@ -10,14 +10,10 @@ hash-for-hash.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 # --- expectations sweep -----------------------------------------------------
@@ -33,7 +29,7 @@ DQ_DATE_HI = "2010-01-01"
 
 
 def dq_expectations_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     wide = orders.selectExpr(
         "CAST(count(*) AS BIGINT) AS n_rows",
         "CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)"
@@ -62,7 +58,7 @@ def dq_expectations_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         ") AS (check_name, n_violations)",
         "n_rows AS n_checked",
     )
-    cust_keys = _t(spark, sf_dir, "customer").select("c_custkey").distinct()
+    cust_keys = load_table(spark, sf_dir, "customer").select("c_custkey").distinct()
     orphans = (
         orders.join(
             cust_keys, orders.o_custkey == cust_keys.c_custkey, "left_anti"
@@ -135,7 +131,7 @@ ER_LEV_MAX = 1
 
 
 def er_fuzzy_match_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").selectExpr(
+    cust = load_table(spark, sf_dir, "customer").selectExpr(
         "c_custkey", "c_name", "c_nationkey",
         "substr(c_name, 10, 6) AS blk",
     )
@@ -207,7 +203,7 @@ ORACLES = {
 # The free-text column profiles LENGTH bounds rather than lexicographic
 # min/max, so unicode collation differences between engines never enter.
 def dq_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     wide = docs.selectExpr(
         "CAST(count(*) AS BIGINT) AS n_rows",
         # doc_id
@@ -313,7 +309,7 @@ _ANALYZE_COLS = (
 
 
 def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = load_table(spark, sf_dir, "lineitem")
     stack_args = ", ".join(
         f"'{name}', {expr}" for name, expr in _ANALYZE_COLS
     )
@@ -389,7 +385,7 @@ ORACLES["analyze_table_stats"] = ANALYZE_TABLE_STATS_SQL
 # discipline as chi-square — then per-class sums over a table bounded by
 # the label-space size.
 def classifier_eval_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n_cjk = F.length(F.regexp_replace(F.col("text"), r"[^一-鿿]", ""))
     has_en = F.col("text").rlike(r"(^| )(the|and|of)( |$)")
     pred = (
@@ -510,12 +506,12 @@ def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bp = _mpl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 10000"
     dropped = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .selectExpr("o_orderkey", f"({bp}) AS bp")
         .filter(F.col("bp") >= FP_DEL_BP)
         .select("o_orderkey")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
     orphans = li.join(
         F.broadcast(dropped), li.l_orderkey == dropped.o_orderkey, "left_semi"
     )
@@ -573,7 +569,7 @@ ORACLES["fk_orphan_audit"] = FK_ORPHAN_AUDIT_SQL
 # ORDER BY ... NULLS FIRST (pinned via min of a row_number).  One scan,
 # conditional aggregation only.
 def null_semantics_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "nullif(o_orderstatus, 'O') AS st",  # NULL for the majority class
         "CASE WHEN o_orderstatus = 'O' THEN NULL"
@@ -691,7 +687,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp_case = "CASE digit " + " ".join(
         f"WHEN {d} THEN {p}" for d, p in _BENFORD_EXP_PPM.items()
     ) + " END"
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     digits = o.selectExpr(
         "CAST(substring(CAST(CAST(round(o_totalprice * 100) AS BIGINT)"
         " AS STRING), 1, 1) AS BIGINT) AS digit"
@@ -758,11 +754,11 @@ ORACLES["benford_first_digit"] = BENFORD_FIRST_DIGIT_SQL
 # delete, subjects affected, and the max per-subject fan-out — the
 # skew number a deletion executor partitions by.
 def deletion_impact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").selectExpr("c_custkey").where(
+    c = load_table(spark, sf_dir, "customer").selectExpr("c_custkey").where(
         "c_custkey % 50 = 3"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
     del_orders = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
         "o_orderkey", "o_custkey"
     )
@@ -839,7 +835,7 @@ ORACLES["deletion_impact_scan"] = DELETION_IMPACT_SCAN_SQL
 # non-trivial: status/priority RLE-or-DICT, custkey PLAIN-ish, price
 # PLAIN.
 def encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderdate",
         "o_orderkey",
         "o_orderstatus AS c_status",
@@ -955,7 +951,7 @@ PART_TARGET_ROWS = 2000
 
 
 def partition_granularity_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr("CAST(o_orderdate AS DATE) AS d")
+    o = load_table(spark, sf_dir, "orders").selectExpr("CAST(o_orderdate AS DATE) AS d")
     grains = [
         ("1:day", "CAST(d AS STRING)"),
         ("2:week", "CAST(date_trunc('WEEK', d) AS STRING)"),
@@ -1085,7 +1081,7 @@ def dp_noisy_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     h = md5_prefix_long_sql("concat('dp|', pri)", 10, "spark")
     cells = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .selectExpr("o_orderpriority AS pri")
         .groupBy("pri")
         .agg(F.count(F.lit(1)).cast("long").alias("true_count"))
@@ -1152,7 +1148,7 @@ EQUIDEPTH_BINS = 10
 
 
 def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v"
     )
     vals = o.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -1234,7 +1230,7 @@ ORACLES["equidepth_histogram"] = EQUIDEPTH_HISTOGRAM_SQL
 # come from min(o_orderdate) so the matrix exercises the engines'
 # readers too, not only literals.
 def date_semantics_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(min(o_orderdate) AS DATE) AS d0"
     )
     return o.selectExpr(
@@ -1299,7 +1295,7 @@ ORACLES["date_semantics_matrix"] = DATE_SEMANTICS_MATRIX_SQL
 # the decode needs no reference to the original row order beyond the
 # runs table itself.
 def rle_roundtrip_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderdate", "o_orderkey", "o_orderstatus AS v"
     )
     w = W.orderBy("o_orderdate", "o_orderkey")
@@ -1417,7 +1413,7 @@ JE_BUCKETS = 10
 
 
 def join_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey")
     rng = li.agg(F.max("l_partkey").alias("mx"))
     bucketed = li.crossJoin(F.broadcast(rng)).selectExpr(
         f"l_partkey DIV (mx DIV {JE_BUCKETS} + 1) AS b", "l_partkey"
@@ -1490,7 +1486,7 @@ def imputation_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 10, "spark")
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderpriority AS pri",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v",
         f"({h}) % 100 < {IMPUTE_MASK_PCT} AS masked",

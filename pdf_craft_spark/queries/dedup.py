@@ -27,17 +27,13 @@ each bucket.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.sources import load_table
+
 N_HASHES = 16
 N_BANDS = 8  # rows-per-band = 2
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
 def _tokens() -> F.Column:
@@ -101,7 +97,7 @@ _SHINGLES_DUCK = _shingle_list_duck()
 
 # --- exact dedup ------------------------------------------------------------
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     return (
         docs.select("doc_id", F.md5(norm).alias("content_hash"))
@@ -172,7 +168,7 @@ cut AS (
 # the textbook Spark shape; the groupBy(doc_a, doc_b) count is the
 # intersection size.  Top-20 pairs with deterministic tie-breaks.
 def dedup_token_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    all_docs = _docs(spark, sf_dir)
+    all_docs = load_table(spark, sf_dir, "documents")
     docs = all_docs.select("doc_id", F.array_distinct(_tokens()).alias("toks"))
     tok = _df_cutoff(
         docs.select("doc_id", F.explode("toks").alias("tok")), all_docs, "tok"
@@ -273,7 +269,7 @@ def _shingle_jaccard_from_cut(sh: DataFrame) -> DataFrame:
 
 
 def dedup_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    all_docs = _docs(spark, sf_dir)
+    all_docs = load_table(spark, sf_dir, "documents")
     # shingle rows come from the session artifact; the df-cutoff stays
     # inline (it is a cheap broadcast anti-join over the materialized
     # rows, and its plan shape is contract-guarded)
@@ -453,7 +449,7 @@ DEDUP_MINHASH_LSH_SQL = _minhash_duck_sql2()
 # under the random-oracle model (previously one md5 per dimension).
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.array_distinct(_tokens())).alias("tok"))
         .select("doc_id", F.md5("tok").alias("h"))
     )
@@ -554,7 +550,9 @@ def shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     one input every shingle consumer (minhash sigs, jaccard ground truth,
     setsim prefix join, containment) derives from."""
     return session_artifact(
-        spark, f"shingles:{sf_dir}", lambda: _shingle_rows(_docs(spark, sf_dir))
+        spark,
+        f"shingles:{sf_dir}",
+        lambda: _shingle_rows(load_table(spark, sf_dir, "documents")),
     )
 
 
@@ -563,7 +561,9 @@ def shingles_cut_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_artifact(
         spark,
         f"shingles_cut:{sf_dir}",
-        lambda: _df_cutoff(shingles_cached(spark, sf_dir), _docs(spark, sf_dir), "sh"),
+        lambda: _df_cutoff(
+            shingles_cached(spark, sf_dir), load_table(spark, sf_dir, "documents"), "sh"
+        ),
     )
 
 
@@ -585,7 +585,7 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionAll(
         pairs.selectExpr("doc_b AS src", "doc_a AS dst")
     ).localCheckpoint(eager=True)
-    labels = _docs(spark, sf_dir).select(
+    labels = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("doc_id").alias("component")
     ).localCheckpoint(eager=True)
     for _ in range(32):  # safety bound far above any real diameter here
@@ -711,7 +711,9 @@ def hash_pct() -> F.Column:
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _docs(spark, sf_dir).select("doc_id", hash_pct().alias("pct"), "text")
+    base = load_table(spark, sf_dir, "documents").select(
+        "doc_id", hash_pct().alias("pct"), "text"
+    )
     existing = base.filter(F.col("pct") < 100 - INGEST_BATCH_PCT)
     batch = base.filter(F.col("pct") >= 100 - INGEST_BATCH_PCT)
     norm = F.md5(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
@@ -981,7 +983,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads the written component table (shared with modularity) — the
     # canonicalization step consumes CC output, it does not re-run CC
     comp = cc_labels_cached(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select("doc_id", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     scored = comp.join(docs, "doc_id")
     w = (
         W.partitionBy("component")
@@ -1245,7 +1247,9 @@ def substr_grams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_artifact(
         spark,
         f"substr_grams:{sf_dir}",
-        lambda: _substr_grams(_docs(spark, sf_dir).select("doc_id", "text")),
+        lambda: _substr_grams(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        ),
     )
 
 
@@ -1360,7 +1364,7 @@ ORACLES["substring_dedup_spans"] = SUBSTRING_DEDUP_SPANS_SQL
 # rewrite for EVERY doc: token counts before/after and the md5 of the
 # cleaned text.
 def substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select("doc_id", F.posexplode(_tokens()).alias("pos", "t"))
     grams = substr_grams_cached(spark, sf_dir)
     dup = (

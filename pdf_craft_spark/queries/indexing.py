@@ -9,14 +9,10 @@ integer/ASCII-exact so the DuckDB oracle matches hash-for-hash.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 # --- inverted index ---------------------------------------------------------
@@ -37,7 +33,7 @@ _TOKEN_RE = "[A-Za-z]{3,}"
 
 
 def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.explode(F.expr(f"regexp_extract_all(text, '{_TOKEN_RE}', 0)")).alias("t"),
@@ -128,7 +124,7 @@ def _zorder_terms(x: str, y: str, engine: str) -> str:
 
 
 def zorder_cluster_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").selectExpr(
+    orders = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(o_custkey & 65535 AS BIGINT) AS x",
         f"CAST(datediff(CAST(o_orderdate AS DATE), DATE '{Z_EPOCH}')"
         " & 65535 AS BIGINT) AS y",
@@ -218,7 +214,7 @@ SPATIAL_R = 1_500
 def spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     E, R = SPATIAL_EXTENT, SPATIAL_R
     pts = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .selectExpr(
             "c_custkey AS id",
             f"CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 6), 16, 10) AS BIGINT) % {E} AS x",
@@ -305,7 +301,7 @@ CONJ_DF_RANKS = (5, 10, 15)
 
 
 def index_conjunctive_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.explode(F.expr(f"regexp_extract_all(text, '{_TOKEN_RE}', 0)")).alias("t"),
@@ -403,7 +399,7 @@ def _hilbert_step(b: int, engine: str) -> tuple[str, str, str]:
 
 
 def hilbert_cluster_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _t(spark, sf_dir, "orders").selectExpr(
+    base = load_table(spark, sf_dir, "orders").selectExpr(
         f"CAST(o_custkey & {HN - 1} AS BIGINT) AS x0",
         f"CAST(datediff(CAST(o_orderdate AS DATE), DATE '{Z_EPOCH}')"
         f" & {HN - 1} AS BIGINT) AS y0",
@@ -512,7 +508,7 @@ def _bm25_sat(engine: str) -> str:
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.textops import IDF_SCALE
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.explode(
@@ -638,7 +634,7 @@ ORACLES["bm25_topk"] = BM25_TOPK_SQL
 # flag per term — the driver hash pins that merge == rebuild on every
 # term, every round.
 def postings_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.explode(F.expr(f"regexp_extract_all(text, '{_TOKEN_RE}', 0)")).alias("t"),
@@ -729,7 +725,7 @@ ORACLES["postings_delta_merge"] = POSTINGS_DELTA_MERGE_SQL
 # index is corrupt).  Shape: two single-scan aggs into |keys|/64 words,
 # a broadcast-sized word join; the fact table is never joined.
 def bitmap_index_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey AS k", "o_orderstatus AS st", "o_orderpriority AS pri"
     )
 
@@ -826,7 +822,7 @@ HOT_Z_MILLI = 3000
 def grid_hotspot_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     E = SPATIAL_EXTENT
     C = E // HOT_CELLS
-    pts = _t(spark, sf_dir, "customer").selectExpr(
+    pts = load_table(spark, sf_dir, "customer").selectExpr(
         f"CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 6), 16, 10) AS BIGINT) % {E} DIV {C} AS cx",
         f"CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 7, 6), 16, 10) AS BIGINT) % {E} DIV {C} AS cy",
     )

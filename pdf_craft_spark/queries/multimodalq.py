@@ -13,8 +13,6 @@ back exactly the pixels that went in."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,24 +27,20 @@ from pdf_craft_spark.functions.multimodal import (
     sample_frames,
     synth_media_table,
 )
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-# One materialized synth-media table per (application, sf_dir): the five
-# media queries share the corpus, and synth_media_table's eager
-# materialization (see its docstring) would otherwise re-run the full
-# payload-generation job once per query in a registry sweep.
-_MEDIA_CACHE: dict[tuple[str, str], DataFrame] = {}
+from pdf_craft_spark.sources import load_table
 
 
 def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MEDIA_CACHE:
-        _MEDIA_CACHE[key] = synth_media_table(_docs(spark, sf_dir))
-    return _MEDIA_CACHE[key]
+    """The synth-media table, checkpointed once per session: the media
+    queries share it, and the checkpoint is what keeps the generation
+    layers from re-expanding in every consumer (synth_media_table)."""
+    from pdf_craft_spark.queries.dedup import session_artifact
+
+    return session_artifact(
+        spark,
+        f"media:{sf_dir}",
+        lambda: synth_media_table(load_table(spark, sf_dir, "documents")),
+    )
 
 
 def media_metadata_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -446,7 +440,7 @@ def media_pdf_metadata_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pdfs = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .filter("doc_id % 4 = 0")
         .selectExpr(
             "concat('p', CAST(doc_id AS STRING)) AS media_ref",
@@ -495,7 +489,7 @@ def pdf_text_extract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pdfs = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .filter("doc_id % 4 = 0")
         .selectExpr(
             "concat('p', CAST(doc_id AS STRING)) AS media_ref",

@@ -9,14 +9,10 @@ regardless of summation order.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 def _dec_sum(col: str | F.Column, alias: str, scale: int = 2) -> F.Column:
@@ -29,7 +25,7 @@ def _dec_sum(col: str | F.Column, alias: str, scale: int = 2) -> F.Column:
 # transform.py:223-245.  Spark shape: partial (map-side) agg + final agg —
 # one shuffle on the two group keys.
 def a1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("decimal(18,2)")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     disc_price = price * (F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)"))
@@ -64,7 +60,7 @@ ORDER BY l_returnflag, l_linestatus
 # --- A1/A2: exact median per group -----------------------------------------
 # Reference: common/statistics.py:17-30 (sorted-middle median).
 def a1_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -90,9 +86,9 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 # nation (25 rows) is the TOC analog → broadcast; customer⋈orders shuffles
 # on the join key only.
 def j3_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    nation = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    nation = load_table(spark, sf_dir, "nation")
     return (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -119,7 +115,7 @@ GROUP BY n_name ORDER BY n_name
 # Reference: footnote refs numbered 1..N by (page_index, order),
 # sequence/chapter.py:78-82 + markdown/render/render.py:31-36.
 def w7_event_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "event_id",
@@ -139,7 +135,7 @@ FROM events ORDER BY user_id, seq_no
 # Reference: chapter segmentation sequence/generation.py:45-87 and paragraph
 # stitching jointer.py:42-96 are both "new-group flag → prefix-sum group id".
 def w5_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = 30 * 60 * 1_000_000
     # ts is TIMESTAMP_NTZ in parquet; session TZ is pinned UTC, so the cast
@@ -188,7 +184,7 @@ FROM sess GROUP BY user_id, session_id ORDER BY user_id, session_id
 # --- F1: text normalization (whitespace collapse + trim) --------------------
 # Reference: PageExtractorNode._normalize_text pdf/page_extractor.py:168-173.
 def f1_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     return docs.select(
         "doc_id",
@@ -210,7 +206,7 @@ FROM documents ORDER BY doc_id
 # jointer.py:181-183 (strip leading '#'s the OCR emits on title layouts).
 # Title layouts are synthesized here by prefixing '## ' onto doc text heads.
 def f4_strip_heading_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     titled = F.concat(F.lit("## "), F.substring("text", 1, 40))
     return docs.select(
         "doc_id",
@@ -232,7 +228,7 @@ FROM documents ORDER BY doc_id
 # to page bounds, drop if left>=right or top>=bottom).  Boxes synthesized
 # deterministically from part columns; clamp to a 600x800 page.
 def f2_bbox_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     left = (F.col("p_partkey") * 13 % 700 - 50).cast("int")
     top = (F.col("p_partkey") * 29 % 900 - 50).cast("int")
     right = (left + F.col("p_size") * 9).cast("int")
@@ -279,7 +275,7 @@ SELECT * FROM clamped WHERE det_l < det_r AND det_t < det_b ORDER BY p_partkey
 # are removed from the body stream.  Analog: drop all events of users who
 # ever emitted an 'error' event (left-anti join on the small exclusion set).
 def f5_exclusion_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bad_users = ev.filter(F.col("event_type") == "error").select("user_id").distinct()
     return (
         ev.join(bad_users, "user_id", "left_anti")
@@ -301,7 +297,7 @@ GROUP BY user_id ORDER BY user_id
 # Reference: TOC candidate top-k toc/toc_pages.py:89-120,136-142 (score-desc
 # sort, keep leading slice).
 def o2_topk_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     w = W.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
     return (
         part.withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -324,7 +320,7 @@ SELECT p_brand, rank, p_partkey, p_retailprice FROM (
 # --- S3: date parse / calendar grouping -------------------------------------
 # Reference: PDF ModDate parse pdf/handler.py:90-117 → timestamp extraction.
 def s3_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy(
             F.year("o_orderdate").cast("bigint").alias("yr"),
@@ -350,7 +346,7 @@ FROM orders GROUP BY 1, 2 ORDER BY yr, mo
 # Reference: asset dedup-by-hash common/asset.py:24-27; seen-set ref dedup
 # sequence/chapter.py:69-75.
 def set_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select("lang", "source").distinct().orderBy("lang", "source")
 
 
@@ -362,7 +358,7 @@ SELECT DISTINCT lang, source FROM documents ORDER BY lang, source
 # --- A9: per-group metrics table --------------------------------------------
 # Reference: OCREvent metrics pdf/ocr.py:22-39 — per-stage counts/timings.
 def a9_event_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -429,8 +425,8 @@ ORACLES = {
 # is cross-multiplied (5 * qty * cnt < sum_qty) so it stays in exact
 # DECIMAL/BIGINT arithmetic — no float division on either engine.
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     stats = li.groupBy("l_partkey").agg(
         F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("sum_qty"),
         F.count(F.lit(1)).alias("cnt"),

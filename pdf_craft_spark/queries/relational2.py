@@ -4,17 +4,12 @@ embedding near-dup verification."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _md5pl
 from pdf_craft_spark.queries.similarity import _DOT
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 # --- as-of join (Spark lacks a native one) ----------------------------------
@@ -23,14 +18,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # last_value(ignore nulls) running window — one shuffle on the key, no
 # range explosion; at scale this beats a theta join by orders of magnitude.
 def asof_latest_order_per_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").alias("key"),
         F.col("ts").alias("t"),
         F.col("event_id"),
         F.lit(None).cast("long").alias("o_orderkey"),
         F.lit(1).alias("is_event"),
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("key"),
         F.col("o_orderdate").alias("t"),
         F.lit(None).cast("long").alias("event_id"),
@@ -83,7 +78,7 @@ ORDER BY event_id
 # float-parity recipe and the null-first ordering live HERE only, so the
 # rollup and cube variants can never diverge
 def _revenue_grouping(spark: SparkSession, sf_dir: str, shape: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     grouped = getattr(li, shape)("l_returnflag", "l_linestatus")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     return grouped.agg(
@@ -115,7 +110,7 @@ A1_ROLLUP_REVENUE_SQL = _revenue_grouping_sql("ROLLUP")
 
 # --- pivot -------------------------------------------------------------------
 def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -140,7 +135,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
 # coarse quantizer stand-in), then exact cosine >= 0.35 confirms near-dups
 # (threshold sized to the synthetic embeddings: same-label q99 ~ 0.30).
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding", F.expr(_DOT.format(a="embedding", b="embedding")).alias("nrm")
     )
     a = emb.select(
@@ -207,7 +202,7 @@ _RATE_KEYS = ["hot"] + [f"k{i}" for i in range(7)]
 
 
 def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.expr(_SKEW_KEY).alias("skew_key"),
         F.col("l_extendedprice").cast("decimal(18,2)").alias("price"),
         F.pmod(F.hash("l_orderkey"), F.lit(N_SALT)).alias("salt"),
@@ -338,7 +333,7 @@ SCD2_OPEN = 9999
 
 def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     pct = _md5pl("CAST(c_custkey AS STRING)", 4, "spark") + " % 100"
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     upd = cust.selectExpr("c_custkey", "c_acctbal", f"({pct}) AS pct").filter(
         F.col("pct") < SCD2_UPD_PCT
     ).select(
@@ -411,7 +406,7 @@ INC_AGG_BASE_PCT = 80
 
 def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     pct = _md5pl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 100"
-    orders = _t(spark, sf_dir, "orders").selectExpr(
+    orders = load_table(spark, sf_dir, "orders").selectExpr(
         "substr(CAST(o_orderdate AS STRING), 1, 7) AS month",
         "o_orderstatus AS status",
         "CAST(o_totalprice AS DECIMAL(18,2)) AS price",
@@ -471,7 +466,7 @@ SKYLINE_BRAND = "Brand#13"
 
 
 def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    parts = _t(spark, sf_dir, "part").filter(
+    parts = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand") == SKYLINE_BRAND
     ).select("p_partkey", "p_retailprice", "p_size")
     pp = parts.groupBy("p_retailprice").agg(F.max("p_size").alias("msize"))
@@ -539,7 +534,7 @@ CDC_INS_KEY_SHIFT = 10_000_000
 
 def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     pct = _md5pl("CAST(c_custkey AS STRING)", 4, "spark") + " % 100"
-    old = _t(spark, sf_dir, "customer").selectExpr(
+    old = load_table(spark, sf_dir, "customer").selectExpr(
         "c_custkey", "c_mktsegment", "c_acctbal", f"({pct}) AS pct"
     )
     new = old.filter(F.col("pct") >= CDC_DEL_PCT).selectExpr(
@@ -630,7 +625,7 @@ KNN_K = 3
 
 
 def knn_graph_block(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         "embedding",
@@ -708,7 +703,7 @@ ORACLES["knn_graph_block"] = KNN_GRAPH_BLOCK_SQL
 # one — any drift from exactly-one-version-per-fact changes the counts.
 def pit_join_orders_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = scd2_customer_history(spark, sf_dir)
-    orders = _t(spark, sf_dir, "orders").selectExpr(
+    orders = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         "CAST(o_totalprice AS DECIMAL(18,2)) AS price",
         "CAST(o_orderkey % 2 AS BIGINT) AS v",
@@ -757,7 +752,7 @@ ORACLES["pit_join_orders_scd2"] = PIT_JOIN_ORDERS_SCD2_SQL
 # Spark expands the sets map-side and aggregates in ONE shuffle (an
 # Expand node feeding a partial agg), not one pass per set.
 def a1_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     return (
         li.groupingSets(
@@ -805,7 +800,7 @@ WINSOR_LO_NUM, WINSOR_HI_NUM, WINSOR_DEN = 5, 95, 100
 
 
 def winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", F.col("l_extendedprice").cast("decimal(18,2)").alias("v")
     )
     w = W.partitionBy("l_returnflag")
@@ -878,7 +873,7 @@ ORACLES["winsorized_price_stats"] = WINSORIZED_PRICE_STATS_SQL
 # orders (rank by date with orderkey tie-break), a self-aligned filter,
 # and an integer bucket rollup — the fact table shuffles once.
 def survival_reorder_times(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", F.col("o_orderdate").cast("date").alias("d")
     )
     w = W.partitionBy("o_custkey").orderBy("d", "o_orderkey")
@@ -940,7 +935,7 @@ ORACLES["survival_reorder_times"] = SURVIVAL_REORDER_TIMES_SQL
 # exact DECIMAL rollup per priority proving every row landed: counts by
 # change class plus the merged balance.
 def merge_into_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
@@ -1047,12 +1042,12 @@ TOPK_OTHER_K = 3
 def topk_suppliers_with_other(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    s = _t(spark, sf_dir, "supplier").select(
+    s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_nationkey",
         F.col("s_acctbal").cast("decimal(18,2)").alias("bal"),
     )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     w = W.partitionBy("s_nationkey").orderBy(
         F.desc("bal"), F.asc("s_suppkey")
     )
@@ -1118,11 +1113,11 @@ ORACLES["topk_suppliers_with_other"] = TOPK_SUPPLIERS_WITH_OTHER_SQL
 # (never a theta join).  Revenue through DECIMAL.  Restricted to one
 # order year by a pushed-down date predicate.
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1997-01-01"))
     ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_suppkey",
         (
@@ -1130,9 +1125,9 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)"))
         ).alias("rev"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
@@ -1178,10 +1173,10 @@ Q8_NATION = "GERMANY"
 
 
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year(F.col("o_orderdate").cast("date")).alias("yr")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_suppkey",
         (
@@ -1189,8 +1184,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)"))
         ).alias("rev"),
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     sn = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
         "s_suppkey", "n_name"
     )
@@ -1252,8 +1247,8 @@ ORACLES["q8_market_share"] = Q8_MARKET_SHARE_SQL
 # per count).  Two shuffles, both on shrinking keys; the left side never
 # loses rows.
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -1297,10 +1292,10 @@ Q3_CUT = "1997-06-01"
 
 
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit(Q3_CUT)
     ).select("o_orderkey", "o_orderdate", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit(Q3_CUT)
     ).select(
         "l_orderkey",
@@ -1359,15 +1354,15 @@ Q9_PART_LIKE = "red"
 
 
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         F.col("p_name").contains(Q9_PART_LIKE)
     ).select("p_partkey", F.col("p_retailprice").cast("decimal(18,2)").alias("retail"))
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year(F.col("o_orderdate").cast("date")).alias("yr")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    li = _t(spark, sf_dir, "lineitem").select(
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         F.col("l_quantity").cast("decimal(18,2)").alias("qty"),
         F.col("l_extendedprice").cast("decimal(18,2)").alias("ext"),
@@ -1427,10 +1422,10 @@ ORACLES["q9_product_profit"] = Q9_PRODUCT_PROFIT_SQL
 # aggregated or deduplicated first.  Both date bounds push into the
 # orders scan.
 def q4_priority_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = orders.join(
         li,
         (orders["o_orderkey"] == li["l_orderkey"])
@@ -1470,7 +1465,7 @@ Q18_QTY_THRESHOLD = 200
 
 
 def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_orderkey", "CAST(floor(l_quantity + 0.5) AS BIGINT) AS q"
     )
     big = (
@@ -1478,8 +1473,8 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("q").alias("sum_qty"))
         .filter(F.col("sum_qty") > Q18_QTY_THRESHOLD)
     )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         orders.join(big, orders["o_orderkey"] == big["l_orderkey"])
         .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
@@ -1523,13 +1518,13 @@ ORACLES["q18_large_volume_orders"] = Q18_LARGE_VOLUME_ORDERS_SQL
 # cent-percent units (price cents x (100 - discount pct)) — no float ever
 # aggregates, so the disjunct-branch totals are order-free.
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_partkey",
         "CAST(floor(l_quantity + 0.5) AS BIGINT) AS q",
         "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS price_cents",
         "CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS disc_pct",
     )
-    part = _t(spark, sf_dir, "part").filter(
+    part = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3")
     )
     j = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"]).filter(
@@ -1592,7 +1587,7 @@ ORACLES["q19_disjunctive_revenue"] = Q19_DISJUNCTIVE_REVENUE_SQL
 # gives every customer at least one order, so inactivity is "no order on
 # or after 2000-01-01" — 55 survivors at sf0.01, a real check.
 def q22_wealthy_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").selectExpr(
+    cust = load_table(spark, sf_dir, "customer").selectExpr(
         "c_custkey",
         "c_nationkey",
         "CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents",
@@ -1604,7 +1599,7 @@ def q22_wealthy_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= "2000-01-01")
         .select("o_custkey")
     )
@@ -1660,7 +1655,7 @@ ORACLES["q22_wealthy_inactive"] = Q22_WEALTHY_INACTIVE_SQL
 # partial-aggregable, so the 100 TB cost is the same one shuffle as a
 # plain GROUP BY with a constant-factor map-side expand.
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("gs_lineitem")
     return spark.sql(
         """

@@ -20,19 +20,18 @@ bit-identical and rounding is purely cosmetic.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.sources import load_table, table_path
+
 N_QUERIES = 10
 TOP_K = 5
 N_PLANES = 8
 DIM = 64
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
 
 
 # The dot product as a left fold over zip_with (interpreted higher-order
@@ -49,7 +48,7 @@ _DOT = (
 
 
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     # norms are per-row: compute them once per side BEFORE the cross join
     # (the higher-order aggregate is interpreted, not codegen'd — don't
     # re-evaluate it per pair)
@@ -136,7 +135,7 @@ def _bit_cols() -> list[F.Column]:
 
 
 def sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
         "vec_id", F.concat(*_bit_cols()).alias("bucket"), "label"
     ).orderBy("vec_id")
@@ -210,7 +209,7 @@ def _bucket_int_expr(tbl: int) -> str:
 
 
 def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         "embedding",
@@ -373,14 +372,13 @@ KMEANS_ITERS = 8  # the sample is ≤2048×64 doubles — extra Lloyd passes are
 # gets the large fraction it genuinely needs while clustered embeddings
 # (the realistic case) automatically get a small one (measured ~0.1,
 # tests/test_ann_clustered.py), instead of every corpus paying the
-# isotropic worst case.  Set the env var (or the module attr, tests) to a
-# float to pin a fixed fraction.
-_NPROBE_ENV = os.environ.get("PDF_CRAFT_SPARK_NPROBE_FRAC", "")
-NPROBE_FRAC: float | None = float(_NPROBE_ENV) if _NPROBE_ENV else None
+# isotropic worst case.  Set the module attr (tests do) to a float to pin
+# a fixed fraction.
+NPROBE_FRAC: float | None = None
 # sample-recall target for the adaptive calibration: margin over the
 # shipped ≥0.9 recall gate (tests/test_ann_recall.py) to absorb
 # sample-vs-corpus estimation error
-IVF_RECALL_TARGET = float(os.environ.get("PDF_CRAFT_SPARK_IVF_RECALL_TARGET", "0.92"))
+IVF_RECALL_TARGET = 0.92
 CAL_QUERIES = 256  # calibration query rows (first sample rows)
 
 # per-directory calibration report (k, nprobe, fraction, sample recall) —
@@ -391,8 +389,6 @@ _CAL_INFO: dict[str, dict] = {}
 # ORACLES entries embed centroids fit on THIS directory.  Tests at other
 # sf values build matched oracles via oracle_overrides().
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-_FIT_CACHE: dict[str, tuple[int, int, list[tuple[int, list[float]]]]] = {}
 
 
 def _fit_sample(sf_dir: str) -> tuple[int, "object"]:
@@ -415,10 +411,9 @@ def _fit_sample(sf_dir: str) -> tuple[int, "object"]:
 
     from pyspark.sql import SparkSession
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
     spark = SparkSession.getActiveSession()
     if spark is not None:
-        df = spark.read.parquet(path).select("vec_id", "embedding")
+        df = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         n = df.count()
         stride = max(1, n // SAMPLE_CAP)
         rows = (
@@ -431,7 +426,7 @@ def _fit_sample(sf_dir: str) -> tuple[int, "object"]:
         return n, mat
     import pyarrow.dataset as ds
 
-    dset = ds.dataset(path)
+    dset = ds.dataset(table_path(sf_dir, "embeddings"))
     n = dset.count_rows()  # row-group metadata only
     stride = max(1, n // SAMPLE_CAP)
     ids: list = []
@@ -449,6 +444,7 @@ def _fit_sample(sf_dir: str) -> tuple[int, "object"]:
     return n, mat
 
 
+@functools.cache
 def ivf_fit(sf_dir: str) -> tuple[int, int, list[tuple[int, list[float]]]]:
     """Sampled k-means fit over the embeddings table → (n_vectors, nprobe,
     [(cid, centroid)]).  Deterministic: fixed vec_id-stride sample
@@ -456,9 +452,9 @@ def ivf_fit(sf_dir: str) -> tuple[int, int, list[tuple[int, list[float]]]]:
     dense 0..n-1 vec_ids both reproduce the historical positional stride
     bit-for-bit), fixed seeds, fixed iteration count, numpy pairwise sums
     (no threaded BLAS reductions) — the same directory always yields the
-    same literals, so Spark and the SQL oracle share one quantizer."""
-    if sf_dir in _FIT_CACHE:
-        return _FIT_CACHE[sf_dir]
+    same literals, so Spark and the SQL oracle share one quantizer.
+    Cached per directory; ``ivf_fit.cache_clear()`` after fit-code edits
+    in a long-lived process."""
     import math
 
     import numpy as np
@@ -503,9 +499,7 @@ def ivf_fit(sf_dir: str) -> tuple[int, int, list[tuple[int, list[float]]]]:
         }
     else:
         nprobe = _calibrate_nprobe(sf_dir, sample, cents)
-    fit = (n, nprobe, [(ci, [float(v) for v in cents[ci]]) for ci in range(k)])
-    _FIT_CACHE[sf_dir] = fit
-    return fit
+    return n, nprobe, [(ci, [float(v) for v in cents[ci]]) for ci in range(k)]
 
 
 def _calibrate_nprobe(sf_dir: str, sample: "object", cents: "object") -> int:
@@ -612,7 +606,7 @@ def ivf_assign_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         _n, _nprobe, cents = ivf_fit(sf_dir)
         return (
-            _emb(spark, sf_dir)
+            load_table(spark, sf_dir, "embeddings")
             .select(
                 "vec_id",
                 "embedding",
@@ -871,7 +865,7 @@ _DOT_I = (
 
 
 def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     quant = (
         emb.selectExpr("vec_id", f"({_SQ_SCALE}) AS sc", "embedding")
         .selectExpr("vec_id", "sc", f"({_SQ_CODES}) AS qv")
@@ -994,7 +988,7 @@ def _kmeans_round_dists(q: DataFrame, cdf: DataFrame, K: int) -> DataFrame:
 def kmeans_int_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = KMEANS_K
     q = (
-        _emb(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.posexplode("embedding").alias("pos", "x"))
         .select(
             "vec_id",
@@ -1257,15 +1251,12 @@ PQ_K = 16  # codes per subspace (4 bits)
 PQ_ITERS = 8
 PQ_SHORTLIST = 100
 
-_PQ_FIT_CACHE: dict[str, list[list[tuple[int, list[float]]]]] = {}
 
-
+@functools.cache
 def pq_fit(sf_dir: str) -> list[list[tuple[int, list[float]]]]:
     """Per-subspace k-means codebooks over the unit-normalized sample —
     deterministic exactly like ivf_fit (same sample rule, farthest-point
     seeding, pairwise numpy sums, fixed iterations)."""
-    if sf_dir in _PQ_FIT_CACHE:
-        return _PQ_FIT_CACHE[sf_dir]
     import numpy as np
 
     _n, mat = _fit_sample(sf_dir)
@@ -1289,7 +1280,6 @@ def pq_fit(sf_dir: str) -> list[list[tuple[int, list[float]]]]:
                 if len(members):
                     cents[ci] = members.mean(axis=0)
         books.append([(ci, [float(v) for v in cents[ci]]) for ci in range(k)])
-    _PQ_FIT_CACHE[sf_dir] = books
     return books
 
 
@@ -1330,7 +1320,7 @@ def pq_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         books = pq_fit(sf_dir)
-        base = _emb(spark, sf_dir).select(
+        base = load_table(spark, sf_dir, "embeddings").select(
             "vec_id",
             "embedding",
             F.expr(_DOT.format(a="embedding", b="embedding")).alias("norm2"),
@@ -1341,7 +1331,7 @@ def pq_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     books = pq_fit(sf_dir)
     base = emb.select(
         "vec_id",
@@ -1740,7 +1730,7 @@ _NDCG_DISC = [int(1_000_000 / _math.log2(r + 1)) for r in range(1, TOP_K + 1)]
 
 
 def ndcg_eval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("qlabel"),
@@ -1886,7 +1876,7 @@ TRUNC_DIMS = (8, 16, 32)
 def ann_dim_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt = sim_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
     qids = gt.select("query_id").distinct()
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     parts = []
     for d in TRUNC_DIMS:
         dot = (

@@ -13,14 +13,10 @@ DECIMAL(38,0)/HUGEINT; divisions may not).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 QUERIES: dict = {}
@@ -44,7 +40,7 @@ MW_B = "5-LOW"
 
 def mannwhitney_u_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .where(F.col("o_orderpriority").isin(MW_A, MW_B))
         .select(
             (F.col("o_totalprice").cast("decimal(18,2)") * 100)
@@ -149,7 +145,7 @@ ORACLES["mannwhitney_u_priority"] = MANNWHITNEY_U_PRIORITY_SQL
 # from the point estimate; only the final standard-error projection is
 # double.  Two shuffles total, both partial-aggregated.
 def jackknife_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_linestatus",
         (
@@ -251,7 +247,7 @@ ANOVA_REF = 95000  # cents; corpus price domain is [90000, 99990]
 
 
 def anova_f_price_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_brand",
         (
             (F.col("p_retailprice").cast("decimal(18,2)") * 100).cast("long")
@@ -328,7 +324,7 @@ ORACLES["anova_f_price_by_brand"] = ANOVA_F_PRICE_BY_BRAND_SQL
 # exact ground truth that variant would be checked against.  Counts are
 # pure integers; tau_b is the single final double (sqrt of exact products).
 def kendall_tau_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_brand",
         F.col("p_partkey").alias("k"),
         F.col("p_size").cast("long").alias("x"),
@@ -417,7 +413,7 @@ ORACLES["kendall_tau_price_size"] = KENDALL_TAU_PRICE_SIZE_SQL
 # (~10 orders -> ~45 pairs) so the equi-join fan-out is bounded and
 # shuffle-local on o_custkey; the rank window partitions by customer.
 def theil_sen_slope_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01")).cast("long").alias("d"),
         (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("c"),

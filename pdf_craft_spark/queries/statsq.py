@@ -9,14 +9,10 @@ inputs); percentiles are ORDER STATISTICS, never interpolation or sketches.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 # --- Spearman rank correlation (integer-exact ranks) -----------------------
@@ -35,7 +31,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # broadcastable whenever the distinct-value table is small, and the final
 # moment aggregation is a single partial-agg shuffle on brand.
 def spearman_brand_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_brand",
         F.col("p_size").cast("long").alias("x"),
         (F.col("p_retailprice").cast("decimal(18,2)") * 100)
@@ -152,7 +148,7 @@ FROM agg ORDER BY p_brand
 # a low-cardinality group key at 100 TB the same recipe runs on the
 # (group, value, cnt) compressed table exactly like spearman's rank join.
 def robust_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_type",
         (F.col("p_retailprice").cast("decimal(18,2)") * 100)
         .cast("long")
@@ -270,11 +266,11 @@ Q21_TOPN = 20
 
 def q21_late_exclusive_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     per_supp = (
@@ -306,7 +302,7 @@ def q21_late_exclusive_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(per_order, "l_orderkey")
         .filter((F.col("n_supp") >= 2) & (F.col("n_late") == 1))
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         blamed.join(F.broadcast(s), blamed.l_suppkey == s.s_suppkey)
         .groupBy("s_name")
@@ -367,7 +363,7 @@ CHISQ_SEGMENTS = 4
 
 
 def chisq_type_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_type", f"CAST(user_id % {CHISQ_SEGMENTS} AS BIGINT) AS segment"
     )
     cells = ev.groupBy("event_type", "segment").agg(
@@ -434,7 +430,7 @@ ORACLES["chisq_type_by_segment"] = CHISQ_TYPE_BY_SEGMENT_SQL
 # fact shuffle for the moments, then a broadcast join back for the
 # per-row pass.
 def zscore_normalize_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("decimal(38,0)")
@@ -536,7 +532,7 @@ MEDIAN_BIN_CENTS = 100_000  # $1000-wide bins
 
 
 def median_binned_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     v = li.selectExpr(
         "l_returnflag AS f",
         "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v",
@@ -663,7 +659,7 @@ def _boot_weight_case(u: str) -> str:
 def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     h = md5_prefix_long_sql("concat(o_orderkey, '|', b)", 15, "spark")
     means = (
         orders.selectExpr(
@@ -784,7 +780,7 @@ _PERM_B = 128
 def permutation_test_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
     )
     base = orders.selectExpr(
@@ -932,7 +928,7 @@ _BH_ALPHA_INV = 10  # alpha = 1/10
 def bh_fdr_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
-    base = _t(spark, sf_dir, "orders").selectExpr(
+    base = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "o_orderpriority AS pri",
         "o_orderstatus AS st",
@@ -1199,7 +1195,7 @@ SPRT_LOWER = -SPRT_UPPER
 
 
 def sequential_ab_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "CAST(ts AS DATE) AS day",
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p",
     )
@@ -1304,7 +1300,7 @@ def ipw_bias_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 10, "spark")
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x",
         f"({h}) AS h",
     ).selectExpr(
@@ -1411,7 +1407,7 @@ MEDIAN_CI_Z_MILLI = 1960  # z = 1.96 (95%)
 
 
 def median_ci_orderstat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v"
     )
     vals = o.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -1501,7 +1497,7 @@ NEYMAN_BUDGET = 10_000
 
 
 def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderpriority AS stratum",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x",
     )
@@ -1610,8 +1606,8 @@ WILSON_Z = 1.96
 
 
 def wilson_lower_bound_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     base = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     agg = base.groupBy("p_brand").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1697,7 +1693,7 @@ PCT_POINTS = (25, 50, 75)
 
 
 def percentile_cont_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v"
     )
     vals = o.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("cnt"))

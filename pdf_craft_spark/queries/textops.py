@@ -15,11 +15,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.sources import load_table
+
 STOPWORDS = ("the", "of", "and", "a", "to", "in", "is", "it", "on", "for")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
 def _tokens_col() -> F.Column:
@@ -30,7 +28,7 @@ def _tokens_col() -> F.Column:
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _tokens_col()
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             F.size(toks).alias("n_tokens"),
@@ -71,7 +69,7 @@ def text_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs, next to the whitespace count (text_token_count)."""
     bpe = F.regexp_extract_all(F.col("text"), F.lit(BPE_PATTERN), 0)
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             F.size(bpe).alias("n_bpe_tokens"),
@@ -106,7 +104,7 @@ FROM t ORDER BY doc_id
 # numerators+denominators plus a rounded double score so the oracle hash
 # is deterministic.
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = _tokens_col()
     n_tok = F.size(toks)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
@@ -149,7 +147,7 @@ FROM t ORDER BY doc_id
 # evidence.  Rule: CJK chars present → 'zh'; else leading-stopword evidence
 # → 'en'; else 'other'.  Deterministic and SQL-expressible in both engines.
 def text_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     n_cjk = F.length(F.regexp_replace(F.col("text"), r"[^一-鿿]", ""))
     has_en = F.col("text").rlike(r"(^| )(the|and|of)( |$)")
     guess = (
@@ -177,7 +175,8 @@ FROM documents ORDER BY doc_id
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _tokens_col()
     fp = F.md5(F.array_join(F.array_sort(F.array_distinct(toks)), " "))
-    return _docs(spark, sf_dir).select("doc_id", fp.alias("fingerprint")).orderBy("doc_id")
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.select("doc_id", fp.alias("fingerprint")).orderBy("doc_id")
 
 
 TEXT_FINGERPRINT_SQL = r"""
@@ -265,7 +264,9 @@ _LINES_SYNTH = (
 
 
 def boilerplate_global_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", F.expr(_LINES_SYNTH).alias("lines"))
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.expr(_LINES_SYNTH).alias("lines")
+    )
     lines = docs.select("doc_id", F.explode("lines").alias("line"))
     freq = (
         lines.groupBy("line")
@@ -343,7 +344,7 @@ def keyword_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     par = spark.sparkContext.defaultParallelism
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
     terms = docs.select(
         "doc_id",
@@ -464,7 +465,7 @@ _PPM = 1_000_000
 def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.selectExpr(
         "doc_id",
         "length(text) AS nch",
@@ -577,7 +578,7 @@ def text_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pdf_craft_spark.queries.dedup import hash_pct
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", hash_pct().alias("pct")
     )
     toks = docs.select(
@@ -670,7 +671,7 @@ BPE_MERGE_TOPK = 20
 def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
             F.explode(
@@ -748,7 +749,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pdf_craft_spark.queries.dedup import _df_cutoff
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
     terms = docs.select(
         "doc_id",
@@ -933,7 +934,7 @@ def _bpe_round(ex_enc: DataFrame):
 
 
 def bpe_train_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
             F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("w")
@@ -1059,7 +1060,7 @@ ORACLES["bpe_train_rounds"] = BPE_TRAIN_ROUNDS_SQL
 # one integer milli-score via pure BIGINT floor arithmetic, identical in
 # both engines.  One scan, regexp counts, no shuffle before the rollup.
 def text_readability_milli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.selectExpr(
         "doc_id",
         "CAST(size(regexp_extract_all(text, '[A-Za-z]+', 0)) AS BIGINT)"
@@ -1121,7 +1122,7 @@ RRF_TOP = 25
 
 
 def rrf_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = _tokens_col()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, F.lower(t))))
@@ -1257,9 +1258,7 @@ COLLOC_TOPK = 20
 def collocation_lift_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.posexplode(
@@ -1357,7 +1356,7 @@ FUNNEL_MIN_TTR_PPM = 310_000
 
 
 def cleaning_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), r"\s+")).alias("t")
     ).where(F.col("t") != "")
@@ -1472,7 +1471,7 @@ for _ in range(RBO_DEPTH):
 
 
 def rbo_rank_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_suppkey",
         "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
     )

@@ -12,14 +12,10 @@ identical canonical form.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 # --- range join: purchase attribution ---------------------------------------
@@ -37,7 +33,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # tests/test_plan_shapes.py.  A click joins at most one of a purchase's
 # two probe rows (its own day), so no post-join dedup is needed.
 def range_join_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # the 2-bucket probe cover assumes tz-free wall-clock days (every
     # calendar day exactly 24h); an LTZ ts under a DST session timezone
     # has 23h days where a qualifying click lands in bucket day-2 and
@@ -112,7 +108,7 @@ ORDER BY 1
 # daily branch here still exhibits the stacked partial-agg shape the
 # ladder relies on, plan-guarded in tests/test_plan_shapes.py.)
 def hypertable_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
         F.col("event_type"),
@@ -186,7 +182,7 @@ SELECT * FROM lvl ORDER BY grain, bucket, event_type
 def asof_join_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     if dict(ev.dtypes).get("ts") != "timestamp_ntz":
         raise TypeError(
             "asof_join_last_click requires a TIMESTAMP_NTZ ts column; "
@@ -285,7 +281,7 @@ ANOMALY_Z2 = 9  # flag beyond 3 sigma (squared)
 
 
 def anomaly_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bounds = ev.selectExpr(
         "date_trunc('hour', min(ts)) AS h0", "date_trunc('hour', max(ts)) AS h1"
     )
@@ -383,7 +379,7 @@ GAP_FILL_USER_MOD = 97
 
 
 def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     known = (
         ev.filter(
             (F.col("event_type") == GAP_FILL_TYPE)
@@ -474,7 +470,7 @@ ORACLES["timeseries_gap_fill"] = TIMESERIES_GAP_FILL_SQL
 # DECIMAL partials re-aggregate exactly.  One shuffle for the daily agg;
 # the ordered window runs over the day spine.
 def rolling_revenue_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     daily = (
         orders.selectExpr(
             "datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') AS day",
@@ -539,7 +535,7 @@ GAP_DROP_MOD = 31
 
 
 def sequence_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").selectExpr("event_id AS id").filter(
+    ev = load_table(spark, sf_dir, "events").selectExpr("event_id AS id").filter(
         F.col("id") % GAP_DROP_MOD != 0
     )
     w = W.orderBy("id")
@@ -590,7 +586,7 @@ ORACLES["sequence_gap_detection"] = SEQUENCE_GAP_DETECTION_SQL
 def attribution_linear_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     if dict(ev.dtypes).get("ts") != "timestamp_ntz":
         raise TypeError(
             "attribution_linear_exact requires a TIMESTAMP_NTZ ts column"
@@ -711,7 +707,7 @@ SLIDE_DAYS = 7
 
 
 def sliding_distinct_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     day = F.datediff(
         F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
     )
@@ -793,7 +789,7 @@ def ewma_order_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         "CAST(o_custkey % 64 AS INT) AS shard",
         "o_orderkey",
@@ -881,7 +877,7 @@ ORACLES["ewma_order_smoothing"] = EWMA_ORDER_SMOOTHING_SQL
 # the planted-shift random-corpus test (the argmax lands on the planted
 # break; the null corpus scores far lower).
 def cusum_changepoint_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(o_orderdate AS DATE) AS day",
         "CAST(round(o_totalprice * 100) AS BIGINT) AS cents",
     )
@@ -970,7 +966,7 @@ ORACLES["cusum_changepoint_revenue"] = CUSUM_CHANGEPOINT_REVENUE_SQL
 # is ROW lag over the observed day sequence (the corpus has near-complete
 # calendar coverage; gaps are documented semantics, not noise).
 def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("day"),
         (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("c"),
     )
@@ -1072,7 +1068,7 @@ ORACLES["acf_daily_revenue"] = ACF_DAILY_REVENUE_SQL
 # the date domain, so this is a broadcast-size series op at any corpus SF.
 def seasonal_decompose_ma7(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select(
             F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01"))
             .cast("long")
@@ -1142,7 +1138,7 @@ ORACLES["seasonal_decompose_ma7"] = SEASONAL_DECOMPOSE_MA7_SQL
 # quadratic sums in DECIMAL(38,0) (products may be wide; divisions never
 # are).  DW = sum(dr^2)/sum(r^2) is the one final double expression.
 def durbin_watson_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("day"),
         (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("c"),
     )
@@ -1240,7 +1236,7 @@ ORACLES["durbin_watson_trend"] = DURBIN_WATSON_TREND_SQL
 # integer terms — every value-deciding step integer, floor-division
 # identical in both engines.
 def forecast_backtest_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day")
     )
     daily = e.groupBy("event_type", "day").agg(
@@ -1343,7 +1339,7 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_shipped(spark)
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .selectExpr(
             "o_orderpriority AS pri",
             "date_trunc('WEEK', CAST(o_orderdate AS DATE)) AS day",
@@ -1451,7 +1447,7 @@ ORACLES["holt_linear_forecast"] = HOLT_LINEAR_FORECAST_SQL
 # order statistic, zero raw-row re-scans, all integer: the p90 rank is
 # ceil(0.9 * n) = (9n + 9) DIV 10.
 def rolling_p90_exact_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(o_orderdate AS DATE) AS day",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v",
     )
@@ -1523,7 +1519,7 @@ ORACLES["rolling_p90_exact_7d"] = ROLLING_P90_EXACT_7D_SQL
 # ordering assumption, no row-lag gap bug; growth is integer basis
 # points via exact cent sums and one truncated division per rate.
 def yoy_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "year(o_orderdate) * 12 + month(o_orderdate) - 1 AS mi",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
     )
@@ -1584,7 +1580,7 @@ ORACLES["yoy_mom_growth"] = YOY_MOM_GROWTH_SQL
 # DECIMAL(38,0) moment sums around truncated means; the ratio is the
 # single final double.  One shuffle (day agg) + tiny windows.
 def seasonality_strength_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("day"),
         (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("c"),
     )
@@ -1694,7 +1690,7 @@ ORACLES["seasonality_strength_index"] = SEASONALITY_STRENGTH_INDEX_SQL
 # gate); the exact-sum property is unaffected, proportionality is exact
 # to one weight quantum (~0.001% here).
 def forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderpriority AS seg",
         "date_trunc('WEEK', CAST(o_orderdate AS DATE)) AS wk",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
@@ -1839,7 +1835,7 @@ FI_HOLDOUT_DAYS = 7
 
 
 def forecast_interval_empirical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).selectExpr(
+    e = load_table(spark, sf_dir, "events").selectExpr(
         "event_type AS et", "CAST(ts AS DATE) AS day"
     )
     daily = e.groupBy("et", "day").agg(F.count(F.lit(1)).cast("long").alias("y"))

@@ -13,16 +13,11 @@ every aggregate is combinable; dimensions broadcast.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _md5pl
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table
 
 
 _CENTS = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -33,7 +28,7 @@ _DISC = "CAST(floor(l_discount * 100 + 0.5) AS BIGINT)"
 # The simplest shape done right: both predicates and the 3-column
 # projection reach the parquet scan; one partial-agg, zero joins.
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_shipdate",
         "l_quantity",
         f"{_CENTS} AS cents",
@@ -70,7 +65,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 
 # --- Q14: promotion effect (conditional ratio in one pass) --------------------
 def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_partkey",
         "l_shipdate",
         f"{_CENTS} AS cents",
@@ -79,7 +74,7 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1996-06-01")
         & (F.col("l_shipdate") < "1996-09-01")
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     return (
         j.agg(
@@ -125,8 +120,8 @@ FROM j
 # the same CASE-sum pivot runs over l_linestatus (the Q12 plan shape: one
 # fact->orders join, one combinable agg of conditional sums).
 def q12_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linestatus")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linestatus")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     j = li.join(o, li.l_orderkey == o.o_orderkey)
     return (
         j.groupBy("l_linestatus")
@@ -169,20 +164,20 @@ ORDER BY l.l_linestatus
 # (NATION_1, NATION_2) in either direction, group by the pair and ship
 # year.  Dimensions broadcast; the one big shuffle is lineitem x orders.
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_orderkey",
         "l_suppkey",
         "year(l_shipdate) AS l_year",
         f"{_CENTS} AS cents",
         f"{_DISC} AS disc",
     ).filter("l_year IN (1996, 1997)")
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
+    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sk"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("ck"), F.col("n_name").alias("cust_nation")
     )
     j = (
@@ -240,17 +235,17 @@ ORDER BY supp_nation, cust_nation, l_year
 
 # --- Q10: returned item reporting (top-20 lossy customers) ---------------------
 def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01")
         & (F.col("o_orderdate") < "1996-07-01")
     ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_orderkey",
         "l_returnflag",
         f"{_CENTS} AS cents",
         f"{_DISC} AS disc",
     ).filter("l_returnflag = 'R'")
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
     j = li.join(o, li.l_orderkey == o.o_orderkey).join(
@@ -293,7 +288,7 @@ LIMIT 20
 # --- Q15: top supplier (ties kept — max via broadcast 1-row join) --------------
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= "1996-01-01")
             & (F.col("l_shipdate") < "1996-04-01")
@@ -307,7 +302,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     mx = rev.agg(F.max("total_centpct").alias("mx"))
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         rev.crossJoin(F.broadcast(mx))
         .filter(F.col("total_centpct") == F.col("mx"))
@@ -346,11 +341,11 @@ ORDER BY s.s_suppkey
 # through broadcast nation.  Ties break on the smaller suppkey (the
 # classic orders by supplier), enforced via one more min aggregation.
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_partkey", "l_suppkey", f"{_CENTS} AS cents"
     )
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
+    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
     asia_sup = (
         sup.join(
             F.broadcast(nat), sup.s_nationkey == nat.n_nationkey
@@ -370,7 +365,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey", "min_cost")
         .agg(F.min("l_suppkey").alias("s_suppkey"))
     )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") == 10).select(
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 10).select(
         "p_partkey", "p_brand"
     )
     return (
@@ -413,10 +408,10 @@ ORDER BY p.p_partkey
 
 # --- Q11: important stock (group share above a global-threshold) ----------------
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_partkey", "l_suppkey", f"{_CENTS} AS cents"
     )
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat1 = (
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .filter(F.col("s_nationkey") == 1)
@@ -458,11 +453,11 @@ ORDER BY value_cents DESC, l_partkey
 # complaint suppliers) — the NOT IN runs as a broadcast anti-join.
 def q16_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bl = _md5pl("CAST(s_suppkey AS STRING)", 4, "spark") + " % 100"
-    blacklist = _t(spark, sf_dir, "supplier").selectExpr(
+    blacklist = load_table(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey", f"({bl}) AS pct"
     ).filter("pct < 5").select("s_suppkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    part = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    part = load_table(spark, sf_dir, "part").filter(
         F.col("p_type") != "PROMO"
     ).select("p_partkey", "p_brand", "p_size")
     j = (
@@ -515,10 +510,10 @@ Q20_QTY_THRESHOLD = 45
 
 
 def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(
+    part = load_table(spark, sf_dir, "part").filter(
         F.col("p_type") == "LARGE"
     ).select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_partkey",
         "l_suppkey",
         "CAST(l_quantity AS BIGINT) AS qty",
@@ -535,7 +530,7 @@ def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    sup = _t(spark, sf_dir, "supplier").select(
+    sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey"
     )
     return (

@@ -20,8 +20,6 @@ arithmetic reproduce exactly across engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -31,15 +29,12 @@ from pdf_craft_spark.queries.dedup import (
     _shingle_list_duck,
     hash_pct as _dedup_hash_pct,
 )
+from pdf_craft_spark.sources import load_table
 
 # split fractions in percent: train 90 / val 5 / test 5
 VAL_PCT, TEST_PCT = 5, 5
 N_SHARDS = 16
 SEQ_CAPACITY = 2048  # tokens per packed training sequence
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
 def _hash_pct() -> F.Column:
@@ -61,7 +56,7 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("test"))
     )
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", split.alias("split"), F.length("text").alias("n_chars"))
         .orderBy("doc_id")
     )
@@ -100,7 +95,7 @@ def _n_tokens() -> F.Column:
 
 
 def _packing_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id", _shard().alias("shard"), _n_tokens().alias("n_tokens")
     )
 
@@ -358,9 +353,7 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     any op), and an empty one quantizes to scale 0.0 / q_csv '' (Spark's
     fold/array_join identities; the oracle coalesces DuckDB's NULL
     list_max/string_agg to match)."""
-    from pdf_craft_spark.queries.similarity import _emb
-
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     scale = "aggregate(emb2, CAST(0.0 AS DOUBLE), (a, x) -> greatest(a, abs(CAST(x AS DOUBLE))))"
     q = (
         "CASE WHEN sc = 0.0 THEN transform(emb2, x -> 0) "
@@ -426,7 +419,7 @@ def packed_sequence_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     leading doc_id field JVM-side before joining — the same trick
     to_nested_output uses for span arrays.  One shuffle on the group
     key."""
-    base = _docs(spark, sf_dir).select(
+    base = load_table(spark, sf_dir, "documents").select(
         "doc_id", _shard().cast("int").alias("shard"), "text", _n_tokens().alias("n_tokens")
     )
     w = W.partitionBy("shard").orderBy("doc_id")
@@ -491,7 +484,7 @@ ORACLES["packed_sequence_texts"] = PACKED_SEQUENCE_TEXTS_SQL
 # integer arithmetic — keep_pct = max(1, (100*min_count) div count) — so
 # both engines agree exactly; the one float op is the output weight.
 def sample_mixture_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "lang")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_lang"))
     mn = counts.agg(F.min("n_lang").alias("mn"))
     dim = counts.crossJoin(F.broadcast(mn)).selectExpr(
@@ -547,7 +540,7 @@ RESERVOIR_K = 100
 
 
 def reservoir_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).selectExpr(
+    docs = load_table(spark, sf_dir, "documents").selectExpr(
         "doc_id", "md5(CAST(doc_id AS STRING)) AS priority", "n_chars"
     )
     sample = docs.orderBy("priority").limit(RESERVOIR_K)
@@ -599,7 +592,7 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     C, S = CHUNK_TOKENS, CHUNK_STRIDE
     docs = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", _tokens().alias("toks"))
         .withColumn("n", F.size("toks"))
         .filter(F.col("n") > 0)
@@ -772,7 +765,7 @@ NEG_K = 3
 
 
 def negative_sample_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pool = (
         docs.select(F.col("doc_id").alias("neg_id"))
         .orderBy(F.md5(F.col("neg_id").cast("string")), "neg_id")
@@ -849,7 +842,7 @@ FH_BUCKETS = 16
 def feature_hash_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     h = md5_prefix_long_sql("term", 8, "spark")
     return (
         docs.select(
@@ -913,7 +906,7 @@ _RANKNORM_DIMS = 8
 
 
 def embed_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select(
         "vec_id", F.posexplode("embedding").alias("dim", "xf")
     ).filter(F.col("dim") < _RANKNORM_DIMS).select(
@@ -1002,7 +995,9 @@ def assign_global_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard_expr = (
         f"CAST({md5_prefix_long_sql('CAST(doc_id AS STRING)', 6, 'spark')} % {N_ID_SHARDS} AS INT)"
     )
-    docs = _docs(spark, sf_dir).selectExpr("doc_id", f"{shard_expr} AS shard")
+    docs = load_table(spark, sf_dir, "documents").selectExpr(
+        "doc_id", f"{shard_expr} AS shard"
+    )
     ranked = docs.select(
         "doc_id",
         "shard",
@@ -1075,7 +1070,7 @@ def priority_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 10, "spark")
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) DIV 100 AS w",
         f"({h}) + 1 AS u",
@@ -1172,7 +1167,7 @@ ORACLES["priority_sample_orders"] = PRIORITY_SAMPLE_ORDERS_SQL
 # the pipeline.  One scan, one user-keyed agg each side, broadcast
 # label join.
 def training_label_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id",
         "event_type",
         "CAST(ts AS DATE) AS day",

@@ -11,7 +11,9 @@ checkout, then ``python3 perfbench/run.py --workload W --seed S
 side that goes first alternates too, so drift on the host hits both).
 For every end-to-end metric of BENCHMARK.json it prints each side's
 median and quartiles, the change's median gain, the parent's
-interquartile range, and the pairs the change won.
+interquartile range, the pairs the change won, and how far the change's
+median is worse than the parent's, relative to the parent median; past
+the metric's ``bound`` the line ends in ``OVER BOUND``.
 
 To measure uncommitted work, pass ``$(git stash create)`` as CHANGE
 (after ``git add -A`` for new files): it names a commit of the working
@@ -75,7 +77,7 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
-        metrics = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        metrics = {m["name"]: m for m in json.load(f)["end_to_end"]}
     tmp = tempfile.mkdtemp(prefix="perf_pairs_")
     try:
         sides = {
@@ -100,14 +102,18 @@ def main(argv=None) -> int:
         failed = sum(r["failed"] for r in results[side])
         attempted = sum(r["attempted"] for r in results[side])
         print(f"{side}: failed {failed}/{attempted} operations over {n} runs")
-    for name, better in metrics.items():
+    for name, m in metrics.items():
+        better, bound = m["better"], m["bound"]
         vals = {s: [r["metrics"][name]["value"] for r in results[s]] for s in results}
         (p1, pm, p3), (c1, cm, c3) = quartiles(vals["parent"]), quartiles(vals["change"])
         sign = 1 if better == "higher" else -1
         won = sum(sign * (c - p) > 0 for p, c in zip(vals["parent"], vals["change"]))
+        worse = sign * (pm - cm) / abs(pm) if pm else 0.0
+        flag = "  OVER BOUND" if worse > bound else ""
         print(f"{name}: parent {pm:.4g} [{p1:.4g}, {p3:.4g}]  change {cm:.4g} "
               f"[{c1:.4g}, {c3:.4g}]  gain {sign * (cm - pm):+.4g} ({better} is better)  "
-              f"parent IQR {p3 - p1:.4g}  change won {won}/{n}")
+              f"parent IQR {p3 - p1:.4g}  change won {won}/{n}  "
+              f"worse {worse:+.1%} (bound {bound:.0%}){flag}")
     return 0
 
 

@@ -8,25 +8,14 @@ import math
 import duckdb
 import pandas as pd
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from pdf_craft_spark.sources import TABLE_NAMES, table_path
 
 
 def duck_run(sf_dir: str, sql: str) -> pd.DataFrame:
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
         )
     return con.sql(sql).df()
 

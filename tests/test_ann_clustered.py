@@ -66,7 +66,7 @@ def test_clustered_recall_at_small_probe_fraction(spark, clustered_dir, monkeypa
     import pdf_craft_spark.queries.similarity as sim
 
     monkeypatch.setattr(sim, "NPROBE_FRAC", 0.1)
-    sim._FIT_CACHE.pop(clustered_dir, None)
+    sim.ivf_fit.cache_clear()
     try:
         n, nprobe, cents = sim.ivf_fit(clustered_dir)
         k = len(cents)
@@ -83,7 +83,7 @@ def test_clustered_recall_at_small_probe_fraction(spark, clustered_dir, monkeypa
             # clears it at 0.1k — the index is doing its job
             assert mean >= 0.9, f"{method} clustered recall {mean:.2f} < 0.9"
     finally:
-        sim._FIT_CACHE.pop(clustered_dir, None)
+        sim.ivf_fit.cache_clear()
 
 
 def test_clustered_adaptive_calibration_picks_small_fraction(clustered_dir, monkeypatch):
@@ -94,7 +94,7 @@ def test_clustered_adaptive_calibration_picks_small_fraction(clustered_dir, monk
     import pdf_craft_spark.queries.similarity as sim
 
     monkeypatch.setattr(sim, "NPROBE_FRAC", None)  # default adaptive path
-    sim._FIT_CACHE.pop(clustered_dir, None)
+    sim.ivf_fit.cache_clear()
     try:
         _n, nprobe, cents = sim.ivf_fit(clustered_dir)
         cal = sim._CAL_INFO[clustered_dir]
@@ -102,4 +102,4 @@ def test_clustered_adaptive_calibration_picks_small_fraction(clustered_dir, monk
         assert nprobe / len(cents) <= 0.15, cal
         assert cal["sample_recall"] >= sim.IVF_RECALL_TARGET
     finally:
-        sim._FIT_CACHE.pop(clustered_dir, None)
+        sim.ivf_fit.cache_clear()

@@ -29,7 +29,7 @@ def _exact_topk(emb: pd.DataFrame):
 def test_sign_codes_match_numpy(spark):
     emb = pd.read_parquet(f"{SF}/embeddings.parquet")
     got = (
-        M._emb(spark, SF)
+        M.load_table(spark, SF, "embeddings")
         .selectExpr(
             "vec_id",
             f"({M._CODE_SPARK.format(off=0)}) AS c_lo",

@@ -640,13 +640,10 @@ def test_kmeans_round_joins_centroids_broadcast(spark):
     the guard inspects the round builder directly.)"""
     from pyspark.sql import functions as F
 
-    from pdf_craft_spark.queries.similarity import (
-        KMEANS_K,
-        _emb,
-        _kmeans_round_dists,
-    )
+    from pdf_craft_spark.queries.similarity import KMEANS_K, _kmeans_round_dists
+    from pdf_craft_spark.sources import load_table
 
-    q = _emb(spark, SF_DIR).select(
+    q = load_table(spark, SF_DIR, "embeddings").select(
         "vec_id", F.posexplode("embedding").alias("pos", "x")
     ).selectExpr("vec_id", "pos", "CAST(floor(x * 1000) AS LONG) AS qv")
     cdf = spark.createDataFrame(

@@ -15,12 +15,12 @@ def test_partitioning_invariance(spark):
 
     import pdf_craft_spark.queries.traindata as td
 
-    orig = td._docs
+    orig = td.load_table
     try:
-        td._docs = lambda s, d: orig(s, d).repartition(13)
+        td.load_table = lambda s, d, name: orig(s, d, name).repartition(13)
         repart = reservoir_sample_docs(spark, SF).collect()
     finally:
-        td._docs = orig
+        td.load_table = orig
     assert base == repart
 
 
@@ -32,11 +32,11 @@ def test_append_stability(spark):
 
     import pdf_craft_spark.queries.traindata as td
 
-    orig = td._docs
+    orig = td.load_table
     try:
-        td._docs = lambda s, d: orig(s, d).filter("doc_id % 7 != 0")
+        td.load_table = lambda s, d, name: orig(s, d, name).filter("doc_id % 7 != 0")
         subset = reservoir_sample_docs(spark, SF).collect()
     finally:
-        td._docs = orig
+        td.load_table = orig
     kept = [r.doc_id for r in full if r.doc_id % 7 != 0]
     assert [r.doc_id for r in subset[: len(kept)]] == kept

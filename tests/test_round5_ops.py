@@ -82,16 +82,14 @@ def test_mixture_sample_is_repartition_invariant(spark):
     a = sample_mixture_by_lang(spark, SF_DIR).collect()
     # content-hash selection must not depend on physical layout
     import pdf_craft_spark.queries.traindata as td
-    import os
 
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    shuffled = docs.repartition(7)
-    orig = td._docs
-    td._docs = lambda s, d: shuffled
+    shuffled = td.load_table(spark, SF_DIR, "documents").repartition(7)
+    orig = td.load_table
+    td.load_table = lambda s, d, name: shuffled
     try:
         b = sample_mixture_by_lang(spark, SF_DIR).collect()
     finally:
-        td._docs = orig
+        td.load_table = orig
     assert a == b
 
 
